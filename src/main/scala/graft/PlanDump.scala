@@ -8,8 +8,10 @@ package graft
   * sub-plan for real, and Tables.fanOut's partition probe forces
   * physical planning of the scan — so checkpointed queries dump a
   * post-checkpoint RDD scan in place of the replaced lineage. When the
-  * interesting change is upstream of a checkpoint, dump the
-  * pre-checkpoint sub-frame from a probe (ProbeR10) instead.
+  * interesting change is upstream of a checkpoint, explain the
+  * un-checkpointed sub-frame instead (e.g. `DedupOps.q168Plan`); the
+  * traced benchmark run (`perfbench/run.py --trace 1`) reports each
+  * query's frame-build and execution time.
   *
   * Usage: PlanDump <sfDir> <outDir> [comma-separated query names|all]
   */

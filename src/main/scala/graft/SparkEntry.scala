@@ -1,67 +1,29 @@
 package graft
 
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Entry-point contract — see SURVEY.md §7. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_agg_summary")(spark, "/root/testdata/sf0.001")
 
+  /** Every query module, once; `queries` and `oracleSql` fold over it. */
+  val modules: Seq[QueryModule] = Seq(
+    Relational, AstroQueries, Pipeline, LlmText, DedupOps, EmbeddingOps,
+    SessionOps, JoinOps, TrainPrep, VectorOps, EventAnalytics, Retrieval,
+    GraphOps, StatsOps, TpchShapes, TemporalOps, LayoutOps, SqlSurface,
+    PatternOps, MaintOps, PlannerOps, ProfileOps, OpsAnalytics, CorpusOps)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.AstroQueries.queries ++
-      graft.queries.Pipeline.queries ++
-      graft.queries.LlmText.queries ++
-      graft.queries.DedupOps.queries ++
-      graft.queries.EmbeddingOps.queries ++
-      graft.queries.SessionOps.queries ++
-      graft.queries.JoinOps.queries ++
-      graft.queries.TrainPrep.queries ++
-      graft.queries.VectorOps.queries ++
-      graft.queries.EventAnalytics.queries ++
-      graft.queries.Retrieval.queries ++
-      graft.queries.GraphOps.queries ++
-      graft.queries.StatsOps.queries ++
-      graft.queries.TpchShapes.queries ++
-      graft.queries.TemporalOps.queries ++
-      graft.queries.LayoutOps.queries ++
-      graft.queries.SqlSurface.queries ++
-      graft.queries.PatternOps.queries ++
-      graft.queries.MaintOps.queries ++
-      graft.queries.PlannerOps.queries ++
-      graft.queries.ProfileOps.queries ++
-      graft.queries.OpsAnalytics.queries ++
-      graft.queries.CorpusOps.queries
+    modules.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracles ++
-      graft.queries.AstroQueries.oracles ++
-      graft.queries.Pipeline.oracles ++
-      graft.queries.LlmText.oracles ++
-      graft.queries.DedupOps.oracles ++
-      graft.queries.EmbeddingOps.oracles ++
-      graft.queries.SessionOps.oracles ++
-      graft.queries.JoinOps.oracles ++
-      graft.queries.TrainPrep.oracles ++
-      graft.queries.VectorOps.oracles ++
-      graft.queries.EventAnalytics.oracles ++
-      graft.queries.Retrieval.oracles ++
-      graft.queries.GraphOps.oracles ++
-      graft.queries.StatsOps.oracles ++
-      graft.queries.TpchShapes.oracles ++
-      graft.queries.TemporalOps.oracles ++
-      graft.queries.LayoutOps.oracles ++
-      graft.queries.SqlSurface.oracles ++
-      graft.queries.PatternOps.oracles ++
-      graft.queries.MaintOps.oracles ++
-      graft.queries.PlannerOps.oracles ++
-      graft.queries.ProfileOps.oracles ++
-      graft.queries.OpsAnalytics.oracles ++
-      graft.queries.CorpusOps.oracles
+    modules.map(_.oracles).reduce(_ ++ _)
 }

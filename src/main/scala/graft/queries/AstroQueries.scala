@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * BigDecimal vs DuckDB float multiply) and manufactures mismatches
   * on decimal-ish data.
   */
-object AstroQueries {
+object AstroQueries extends QueryModule {
 
   // Shared synthetic "star" columns over lineitem.
   private def starX: Column = col("l_extendedprice") / 1000.0

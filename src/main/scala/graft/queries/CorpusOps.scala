@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Round-6 widening: corpus boilerplate removal, record-linkage
   * pattern frequencies, and driver-gated sketch-quantile evaluation.
   */
-object CorpusOps {
+object CorpusOps extends QueryModule {
 
   /** q249 boilerplate threshold: a segment appearing in >= this many
     * DISTINCT documents is boilerplate.

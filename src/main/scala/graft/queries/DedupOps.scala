@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * at scale but are not reproducible in the oracle; md5 only survives
   * where strings must collide exactly (band hashes).
   */
-object DedupOps {
+object DedupOps extends QueryModule {
 
   val SHINGLE_N = 5
   val NUM_HASHES = 16
@@ -777,8 +777,8 @@ object DedupOps {
     * ~90 us core per candidate, and sf1 stayed at 172 s vs dense's
     * 150 s — the per-pair constant, not the asymptotics, dominated) ->
     * this expression (see SURVEY §8j for the three isolated sf1
-    * measurements). The probe decomposition that attributed 94% of
-    * sf1 wall time to the verify join is ProbeQ168 in the test tree.
+    * measurements). A stage-by-stage decomposition attributed 94% of
+    * sf1 wall time to the verify join.
     */
   def q168PrefixJoin(spark: SparkSession, dir: String): DataFrame = {
     val (out, cleanup) = q168Plan(spark, dir)

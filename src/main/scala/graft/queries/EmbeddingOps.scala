@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * — codegen'd, no UDF. A custom Catalyst expression with doGenCode is
   * the planned upgrade (SURVEY §7 step 7).
   */
-object EmbeddingOps {
+object EmbeddingOps extends QueryModule {
 
   val TOP_K = 5
   /** Fixed query-set size: the first NUM_QUERIES vec_ids. A CONSTANT,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * same key as every other per-user pass, so at 100 TB they
   * co-partition with sessionization for free.
   */
-object EventAnalytics {
+object EventAnalytics extends QueryModule {
 
   /** q73 funnel window: a purchase converts a click if it follows
     * within this bound (same user).

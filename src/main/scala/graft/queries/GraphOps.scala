@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** Graph analytics over the co-purchase graph (SURVEY.md §2 q117),
   * complementing q103's PageRank and q53/q63's connected components.
   */
-object GraphOps {
+object GraphOps extends QueryModule {
 
   /** Minimum co-purchase count for an edge — the standard graph-
     * cleaning step that drops one-off co-occurrences; also what keeps

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * native-engine oracles: DuckDB's ASOF JOIN and inequality join
   * verify the Spark formulations row-for-row.
   */
-object JoinOps {
+object JoinOps extends QueryModule {
 
   /** q44: as-of enrichment — every event joined to its user's latest
     * hourly value-checkpoint at or before the event (AsOfJoin: one

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * oracle-gated queries, so the driver's DuckDB gate proves their
   * semantics too, not just the Scala specs.
   */
-object LayoutOps {
+object LayoutOps extends QueryModule {
 
   /** q165: EXACT GROUPED QUANTILES via the bucket-prune operator — the
     * `quantile_cont` p25/p50/p75 of l_extendedprice per return flag,

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * a content hash so the exchange carries (hash, min-id, count) — not
   * document bodies.
   */
-object LlmText {
+object LlmText extends QueryModule {
 
   /** q26: exact deduplication — group by content md5, keep the minimum
     * doc_id as the canonical copy. The shuffle carries only hashes and

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** Round-5 batch 6: lakehouse-maintenance planning and two feature/
   * ranking transforms.
   */
-object MaintOps {
+object MaintOps extends QueryModule {
 
   /** q179 compaction target: bytes per output bin (64 KB at test
     * scale; the same plan runs with 128 MB bins in production).

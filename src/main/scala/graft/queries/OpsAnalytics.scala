@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * the lateness decomposition), so at 100 TB they co-schedule with the
   * existing scans instead of adding new exchange shapes.
   */
-object OpsAnalytics {
+object OpsAnalytics extends QueryModule {
 
   /** q201 attribution lookback: a purchase credits the last click only
     * if it happened within this many micros before it.

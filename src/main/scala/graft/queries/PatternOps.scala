@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * and forensic digit auditing — analytics shapes the inventory's
   * Markov/z-score/drift families do not cover.
   */
-object PatternOps {
+object PatternOps extends QueryModule {
 
   /** q175: SEQUENTIAL PATTERN COUNTS — for every ordered type pair
     * (a, b), how many users exhibit "a THEN b" anywhere in their

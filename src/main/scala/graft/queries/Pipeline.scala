@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * stringified at the final projection (parquet tz-aware vs oracle
   * naive timestamps would otherwise mismatch in the driver compare).
   */
-object Pipeline {
+object Pipeline extends QueryModule {
 
   /** q21: per-snapshot overall stats with masked variants in ONE pass —
     * conditional aggregation instead of the reference's recompute-per-

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Round-5 batch 8 (non-streaming half): optimizer-statistic and
   * sampling operators.
   */
-object PlannerOps {
+object PlannerOps extends QueryModule {
 
   /** q186: SELF-JOIN CARDINALITY ESTIMATE — the cost-based-optimizer
     * statistic behind join planning (and the companion to q157's skew

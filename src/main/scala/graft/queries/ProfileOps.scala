@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** Round-5 batch 10: time-series SLO percentiles, cross-source corpus
   * containment, and auto-binned histograms.
   */
-object ProfileOps {
+object ProfileOps extends QueryModule {
 
   /** q191: HOURLY P95 TIME SERIES — the SLO/latency panel metric:
     * per (hour, event_type), exact p50/p95 of value plus the exact

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * identical across engines, partition counts, and thread schedules;
   * raw column values pass through exactly.
   */
-object Relational {
+object Relational extends QueryModule {
 
   /** q01: grouped aggregation with map-side combine (pricing summary).
     * Scale note: group-by on low-cardinality keys -> partial agg

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * scalar (score / cosine) touches doubles, via identical IEEE ops on
   * bit-identical inputs in both engines.
   */
-object Retrieval {
+object Retrieval extends QueryModule {
 
   /** q114 query terms — literals in the plan AND the oracle SQL. */
   val BM25_TERMS: Seq[String] = Seq("spark", "join", "window", "stream", "vector")

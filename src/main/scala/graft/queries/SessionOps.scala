@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * sink table — its oracle is the batch-equivalent SQL, which is the
   * whole point: stream/batch parity on one logical plan.
   */
-object SessionOps {
+object SessionOps extends QueryModule {
 
   val GAP_MINUTES = 30
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * before charting (missing buckets must exist as zeros, not be
   * silently absent).
   */
-object SqlSurface {
+object SqlSurface extends QueryModule {
 
   /** q288: CORRELATED SCALAR SUBQUERIES — the SQL surface every ORM
     * and hand-written report leans on: per-order scalar lookups

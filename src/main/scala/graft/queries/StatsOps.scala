@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * runs over whole tables, built to cost ONE scan regardless of how
   * many statistics come out.
   */
-object StatsOps {
+object StatsOps extends QueryModule {
 
   /** q121 feature columns — the full correlation matrix over these. */
   val CORR_COLS: Seq[String] =

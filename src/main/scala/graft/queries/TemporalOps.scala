@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * the sessionization family pins — so results are deterministic under
   * equal timestamps in both engines.
   */
-object TemporalOps {
+object TemporalOps extends QueryModule {
 
   /** q162: EVENT-TYPE MARKOV TRANSITION MATRIX — for each ordered pair
     * (prev_type -> next_type), the transition count and row-normalized

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * identical in DuckDB), and every AVG-comparison is cross-multiplied
   * into pure integer arithmetic so the oracle hash is bit-stable.
   */
-object TpchShapes {
+object TpchShapes extends QueryModule {
 
   /** q158: ORDER-COUNT DISTRIBUTION (the TPC-H Q13 shape) — how many
     * customers placed exactly k orders, INCLUDING the zero bucket that

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * (fixed, tiny vs corpus) — the corpus side streams through a
   * broadcast-hash semi-join, never shuffling text.
   */
-object TrainPrep {
+object TrainPrep extends QueryModule {
 
   /** Shard count for q46. In production this is the write parallelism
     * (thousands); small here so sf0.001 still has multi-doc shards.

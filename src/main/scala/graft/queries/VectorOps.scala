@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * the corpus — and the component step reuses the distributed
   * label-propagation operator (graft.operators.ConnectedComponents).
   */
-object VectorOps {
+object VectorOps extends QueryModule {
 
   /** int8 quantization scale: floor(x * Q_SCALE) clamped to [-128, 127].
     * floor (not round) because IEEE floor is exactly portable across

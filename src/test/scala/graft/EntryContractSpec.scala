@@ -18,20 +18,7 @@ class EntryContractSpec extends SparkSpec {
   }
 
   test("query names are unique across the module maps") {
-    val maps = Seq(
-      graft.queries.Relational.queries, graft.queries.AstroQueries.queries,
-      graft.queries.Pipeline.queries, graft.queries.LlmText.queries,
-      graft.queries.DedupOps.queries, graft.queries.EmbeddingOps.queries,
-      graft.queries.SessionOps.queries, graft.queries.JoinOps.queries,
-      graft.queries.TrainPrep.queries, graft.queries.VectorOps.queries,
-      graft.queries.EventAnalytics.queries, graft.queries.Retrieval.queries,
-      graft.queries.GraphOps.queries, graft.queries.StatsOps.queries,
-      graft.queries.TpchShapes.queries, graft.queries.TemporalOps.queries,
-      graft.queries.LayoutOps.queries, graft.queries.SqlSurface.queries,
-      graft.queries.PatternOps.queries, graft.queries.MaintOps.queries,
-      graft.queries.PlannerOps.queries, graft.queries.ProfileOps.queries,
-      graft.queries.OpsAnalytics.queries, graft.queries.CorpusOps.queries)
-    val all = maps.flatMap(_.keys)
+    val all = SparkEntry.modules.flatMap(_.queries.keys)
     val dups = all.groupBy(identity).filter(_._2.size > 1).keys.toSeq
     assert(dups.isEmpty, s"duplicate query names shadow each other: $dups")
     assert(all.size === SparkEntry.queries.size,
