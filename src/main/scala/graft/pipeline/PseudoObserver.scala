@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.functions.Astro
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Observed snapshot tables: stars carry offset-frame observables and
@@ -46,7 +47,15 @@ object PseudoObserver {
       logL.as("log_L_L_sol"), logR.as("log_R_R_sol"))
   }
 
-  /** Observe every assembled snapshot from one observer coordinate. */
+  /** Observe every assembled snapshot from one observer coordinate.
+    *
+    * Plan size: each reference to `assembled.stars` or `.binaries`
+    * embeds that frame's whole plan, which for freshly assembled (not
+    * loaded) tables is the assembly itself. So the unresolved-system
+    * steps read the observed binaries once, through a per-snapshot
+    * window and one member lookup, instead of joining them with
+    * themselves.
+    */
   def observe(assembled: Assembled, coord: (Double, Double, Double)): Observed = {
     val starsW = assembled.stars.filter(col("is_within_2x_r_tidal"))
     val binsW = assembled.binaries.filter(col("is_within_2x_r_tidal"))
@@ -66,11 +75,13 @@ object PseudoObserver {
 
     val obs = OffsetFrame.project(starsH, coord)
 
-    // observed distance + resolvability per system
+    // observed distance + resolvability per system; a member's distance
+    // depends on its position only, not on the hierarchy labels
     val memberObs = binsW
       .select((KEY.map(col) :+ col("pair") :+
         explode(concat(col("obj1_ids"), col("obj2_ids"))).as("name")): _*)
-      .join(obs.select((KEY.map(col) :+ col("name") :+ col("dist_pc")): _*),
+      .join(OffsetFrame.project(starsW, coord)
+          .select((KEY.map(col) :+ col("name") :+ col("dist_pc")): _*),
         KEY :+ "name")
       .groupBy((KEY :+ "pair").map(col): _*)
       .agg(avg(col("dist_pc")).as("dist_obs_pc"))
@@ -91,69 +102,58 @@ object PseudoObserver {
       .withColumn("is_unresolved_binary", lit(false))
 
     // ---- unresolved systems -> merged photocentric objects ---------
+    def subsetOf(a: Column, b: Column): Column = size(array_except(a, b)) === 0
+    // `others`: every unresolved system of the snapshot, for the two
+    // subset tests below
     val unres = binaries.filter(col("is_unresolved_binary_system"))
       .withColumn("members", sort_array(concat(col("obj1_ids"), col("obj2_ids"))))
+      .withColumn("others", collect_list(struct(col("pair").as("p"),
+        col("members").as("ms"))).over(Window.partitionBy(KEY.map(col): _*)))
 
     // top-level = member set not a strict subset of another unresolved
-    // system's member set (reference: observer.py:103)
-    val other = unres.select(col("sim_id").as("o_sim_id"),
-      col("time").as("o_time"), col("members").as("o_members"))
-    val topUnres = unres.join(other,
-        col("sim_id") === col("o_sim_id") && col("time") === col("o_time") &&
-          size(array_except(col("members"), col("o_members"))) === 0 &&
-          size(col("members")) < size(col("o_members")), "left_anti")
+    // system's member set (reference: observer.py:103); its hierarchy
+    // gets every unresolved pair whose members are a subset of its own
+    // (reference: observer.py:134-146)
+    val topUnres = unres
+      .filter(!exists(col("others"), o =>
+        subsetOf(col("members"), o.getField("ms")) &&
+          size(col("members")) < size(o.getField("ms"))))
+      .withColumn("sub_pairs", array_distinct(transform(
+        filter(col("others"), o => subsetOf(o.getField("ms"), col("members"))),
+        _.getField("p"))))
 
     // component-side attrs: atoms look up the star; regularized pairs
-    // merge their two members first (bounded recursion level 1)
+    // merge their two members first (bounded recursion level 1). One
+    // lookup serves both sides; a side with a member not found, or with
+    // more than two members, drops its system. The side merge and the
+    // system merge sit on two aggregations, so a filter on the merged
+    // object's columns inlines at most one merge level.
     val attrStruct = struct(ATTR.map(col): _*).as("attrs")
     val atomAttrs = obs.select((KEY.map(col) :+ col("name") :+ attrStruct): _*)
-    def sideAttrs(side: Int): DataFrame = {
-      val ids = col(s"obj${side}_ids")
-      val base = topUnres.select((KEY.map(col) :+ col("pair") :+ ids.as("ids")): _*)
-      val atomSide = base.filter(size(col("ids")) === 1)
-      val atom = atomSide
-        .join(atomAttrs,
-          KEY.map(k => atomSide(k) === atomAttrs(k)).reduce(_ && _) &&
-            element_at(atomSide("ids"), 1) === atomAttrs("name"))
-        .select((atomSide.columns.map(atomSide(_)) :+ atomAttrs("attrs")): _*)
-      val pairIds = base.filter(size(col("ids")) === 2)
-      val a1 = atomAttrs.select(col("sim_id").as("s1"), col("time").as("t1"),
-        col("name").as("n1"), col("attrs").as("attrs1"))
-      val a2 = atomAttrs.select(col("sim_id").as("s2"), col("time").as("t2"),
-        col("name").as("n2"), col("attrs").as("attrs2"))
-      val merged = pairIds
-        .join(a1, col("sim_id") === col("s1") && col("time") === col("t1") &&
-          element_at(col("ids"), 1) === col("n1"))
-        .join(a2, col("sim_id") === col("s2") && col("time") === col("t2") &&
-          element_at(col("ids"), 2) === col("n2"))
-        .select((pairIds.columns.map(pairIds(_)) :+
-          mergePair(col("attrs1"), col("attrs2")).as("attrs")): _*)
-      atom.unionByName(merged)
-        .withColumnRenamed("attrs", s"attrs$side").drop("ids")
-    }
-
-    val withSides = sideAttrs(1).join(sideAttrs(2), KEY :+ "pair")
-      .withColumn("m", mergePair(col("attrs1"), col("attrs2")))
-      .drop("attrs1", "attrs2")
-
-    // merged-system hierarchy: member ids + every unresolved pair whose
-    // members are a subset (reference: observer.py:134-146)
-    val contained = topUnres.select((KEY.map(col) :+ col("pair") :+ col("members")): _*)
-      .join(unres.select(col("sim_id").as("u_sim_id"), col("time").as("u_time"),
-        col("pair").as("u_pair"), col("members").as("u_members")),
-        col("sim_id") === col("u_sim_id") && col("time") === col("u_time") &&
-          size(array_except(col("u_members"), col("members"))) === 0)
-      .groupBy((KEY :+ "pair").map(col): _*)
-      .agg(collect_set(col("u_pair")).as("sub_pairs"))
+    val sysCols = KEY ++ Seq("pair", "members", "sub_pairs")
+    def attrsAt(arr: String, i: Int): Column = get(col(arr), lit(i)).getField("attrs")
+    val sides = topUnres
+      .select((sysCols.map(col) :+
+        posexplode(array(col("obj1_ids"), col("obj2_ids"))).as(Seq("side", "ids"))): _*)
+      .select((sysCols.map(col) ++ Seq(col("side"), size(col("ids")).as("n"),
+        posexplode(col("ids")).as(Seq("pos", "name")))): _*)
+      .join(atomAttrs, KEY :+ "name")
+      .groupBy((sysCols ++ Seq("side", "n")).map(col): _*)
+      .agg(sort_array(collect_list(struct(col("pos"), col("attrs")))).as("a"))
+      .filter(size(col("a")) === col("n") && col("n") <= 2)
+      .withColumn("attrs", when(col("n") === 1, attrsAt("a", 0))
+        .otherwise(mergePair(attrsAt("a", 0), attrsAt("a", 1))))
+    val withSides = sides
+      .groupBy(sysCols.map(col): _*)
+      .agg(sort_array(collect_list(struct(col("side"), col("attrs")))).as("s"))
+      .filter(size(col("s")) === 2)
+      .withColumn("m", mergePair(attrsAt("s", 0), attrsAt("s", 1)))
 
     val hdr = assembled.headers.select((KEY.map(col) :+ col("density_center") :+
       col("r_tidal") :+ col("r_half_mass")): _*)
     val mergedStars0 = withSides
-      .join(contained, KEY :+ "pair", "left")
-      .join(topUnres.select((KEY.map(col) :+ col("pair") :+ col("members")): _*), KEY :+ "pair")
       .join(broadcast(hdr), KEY)
-      .select((KEY.map(col) ++ Seq(col("pair"), col("members"),
-        coalesce(col("sub_pairs"), array()).as("sub_pairs"),
+      .select((KEY.map(col) ++ Seq(col("pair"), col("members"), col("sub_pairs"),
         col("m"), col("density_center"), col("r_tidal"), col("r_half_mass"))): _*)
 
     val dcDist = {

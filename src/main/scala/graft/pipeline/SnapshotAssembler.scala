@@ -33,10 +33,21 @@ object Assembled {
   * by (sim_id, time), so one plan assembles every snapshot of every
   * simulation at once — snapshots scale out instead of iterating.
   *
-  * Shuffle audit: all joins/windows key on (sim_id, time [, name]) —
-  * a single hash partitioning is reused across stages; the tiny per-
-  * snapshot tables (density center, half-mass radius, star stats) are
-  * broadcast.
+  * Shuffle audit: the three tables form a chain, each later one reading
+  * the earlier ones as frames.
+  *  - `stars` reads the block text of OUT34, OUT9, fort.82/83 and
+  *    densCentre, plus OUT9 and fort.19 for the hierarchy labels, which
+  *    come from the labeled systems alone, not from `binaries`.
+  *  - `binaries` reads OUT9 and fort.19 for the systems, and the final
+  *    `stars` frame for its member lookups and per-snapshot star
+  *    statistics.
+  *  - `headers` reads densCentre and the OUT34 headers, plus the star
+  *    statistics (over `stars`) and `binaries`.
+  * So a writer that persists `stars` and then `binaries` computes each
+  * table once: Spark's CacheManager swaps the pinned frames into the
+  * later plans (SnapshotStats.writePartitioned). All joins/windows key
+  * on (sim_id, time [, name]); the tiny per-snapshot tables (density
+  * center, half-mass radius, star stats) are broadcast.
   */
 object SnapshotAssembler {
 
@@ -95,6 +106,37 @@ object SnapshotAssembler {
     sqrt(dx * dx + dy * dy + dz * dz)
   }
 
+  /** Half-mass radius per snapshot over the stars within 2 r_tidal
+    * (reference: calc/cluster.py:14 — the first distance where the
+    * cumulative mass crosses half the total; searchsorted 'left' ==
+    * min crossing). `df` needs sim_id, time, name, mass, dist_dc_pc and
+    * dist_dc_r_tidal.
+    */
+  private def halfMassRadius(df: DataFrame): DataFrame = {
+    val wCum = Window.partitionBy(KEY.map(col): _*)
+      .orderBy("dist_dc_pc", "name").rowsBetween(Window.unboundedPreceding, 0)
+    val wAll = Window.partitionBy(KEY.map(col): _*)
+    df.filter(col("dist_dc_r_tidal") <= 2)
+      .select(col("sim_id"), col("time"), col("dist_dc_pc"), col("name"), col("mass"))
+      .withColumn("cum_mass", sum("mass").over(wCum))
+      .withColumn("total_mass", sum("mass").over(wAll))
+      .filter(col("cum_mass") >= col("total_mass") / 2)
+      .groupBy(KEY.map(col): _*)
+      .agg(min("dist_dc_pc").as("r_half_mass"))
+  }
+
+  /** Sum and mean of an array's non-null values, added in array order
+    * (null when there are none, like SQL sum/avg). An aggregate's sum
+    * adds rows in the order the shuffle delivers them, so its low bits
+    * change with the partitioning; a fold over a sorted array does not.
+    */
+  private def orderedSum(xs: Column): Column = {
+    val present = filter(xs, _.isNotNull)
+    when(size(present) > 0, aggregate(present, lit(0.0), _ + _))
+  }
+  private def orderedAvg(xs: Column): Column =
+    orderedSum(xs) / size(filter(xs, _.isNotNull))
+
   /** Full assembly. Inputs are the NBody6 reader outputs; snapshots
     * with r_tidal <= 0 (dissolved cluster) are dropped like the
     * reference aborts them (assembler.py:523).
@@ -107,49 +149,7 @@ object SnapshotAssembler {
     val dc = dcH.filter(col("r_tidal") > 0)
       .select(col("sim_id"), col("time"), col("r_tidal"), col("density_center"))
 
-    // --- stars -----------------------------------------------------
-    val posvel = expandComPositions(o34d, o9d)
-    val attrs = buildAttrs(f82d, f83d)
-    val stars0 = posvel.join(attrs, KEY :+ "name")
-      .join(broadcast(dc), KEY)
-      .withColumn("dist_dc_pc",
-        distTo(col("density_center"), col("x"), col("y"), col("z")))
-      .withColumn("dist_dc_r_tidal", col("dist_dc_pc") / col("r_tidal"))
-      .withColumn("is_within_r_tidal", col("dist_dc_pc") <= col("r_tidal"))
-      .withColumn("is_within_2x_r_tidal", col("dist_dc_pc") <= col("r_tidal") * 2)
-
-    // half-mass radius over stars within 2 r_tidal (reference:
-    // calc/cluster.py:14 — first distance where cumulative mass
-    // crosses half the total; searchsorted 'left' == min crossing)
-    val wCum = Window.partitionBy(KEY.map(col): _*)
-      .orderBy("dist_dc_pc", "name").rowsBetween(Window.unboundedPreceding, 0)
-    val wAll = Window.partitionBy(KEY.map(col): _*)
-    val rHalf = stars0.filter(col("dist_dc_r_tidal") <= 2)
-      .select(col("sim_id"), col("time"), col("dist_dc_pc"), col("name"), col("mass"))
-      .withColumn("cum_mass", sum("mass").over(wCum))
-      .withColumn("total_mass", sum("mass").over(wAll))
-      .filter(col("cum_mass") >= col("total_mass") / 2)
-      .groupBy(KEY.map(col): _*)
-      .agg(min("dist_dc_pc").as("r_half_mass"))
-
-    val stars1 = stars0.join(broadcast(rHalf), KEY)
-      .withColumn("dist_dc_r_half_mass", col("dist_dc_pc") / col("r_half_mass"))
-      .withColumnRenamed("tempe", "log_T_eff_K")
-      .withColumnRenamed("zlum", "log_L_L_sol")
-      .withColumnRenamed("rad", "log_R_R_sol")
-
-    val starStats = stars1.groupBy(KEY.map(col): _*).agg(
-      round(first("r_tidal"), 4).as("r_tidal"),
-      round(first("r_half_mass"), 4).as("r_half_mass"),
-      sum(when(col("dist_dc_r_tidal") <= 1, 1L).otherwise(0L)).as("n_stars_within_r_tidal"),
-      sum(when(col("dist_dc_r_tidal") <= 2, 1L).otherwise(0L)).as("n_stars_within_2x_r_tidal"),
-      round(sum("mass"), 4).as("total_mass"),
-      round(sum(when(col("dist_dc_r_tidal") <= 1, col("mass")).otherwise(0.0)), 4)
-        .as("total_mass_within_r_tidal"),
-      round(sum(when(col("dist_dc_r_tidal") <= 2, col("mass")).otherwise(0.0)), 4)
-        .as("total_mass_within_2x_r_tidal"))
-
-    // --- binaries --------------------------------------------------
+    // --- binary systems, labeled (OUT9 + fort.19 only) ---------------
     val bins0 = o9d.select(col("sim_id"), col("time"), col("ecc"), col("p"),
         col("mass1"), col("mass2"), col("name1"), col("name2"))
         .withColumn("src", lit("OUT9"))
@@ -193,68 +193,28 @@ object SnapshotAssembler {
       .withColumnRenamed("name1", "obj1_name")
       .withColumnRenamed("name2", "obj2_name")
 
-    // per-member lookups in one explode + one aggregation (reference
-    // does per-row dict lookups: assembler.py:289,360-418)
-    val binKey = KEY ++ Seq("obj1_name", "obj2_name", "src")
-    val membersE = labeled.select(
-      (binKey.map(col) :+ size(col("obj1_ids")).as("n1") :+
-        posexplode(concat(col("obj1_ids"), col("obj2_ids"))).as(Seq("mpos", "member"))): _*)
-    val starLkp = stars1.select(col("sim_id"), col("time"), col("name").as("member"),
-      col("mass").as("m_mass"), col("dist_dc_pc").as("m_dist"),
-      col("dist_dc_r_tidal").as("m_dist_rt"),
-      col("dist_dc_r_half_mass").as("m_dist_rhm"))
-    val memberAgg = membersE
-      .join(starLkp, KEY :+ "member", "left")
-      .groupBy(binKey.map(col): _*)
-      .agg(
-        sort_array(collect_list(struct(col("mpos"),
-          when(col("mpos") < col("n1"), col("m_mass")).as("m")))).as("s1"),
-        sort_array(collect_list(struct(col("mpos"),
-          when(col("mpos") >= col("n1"), col("m_mass")).as("m")))).as("s2"),
-        sum(when(col("mpos") < col("n1"), col("m_mass"))).as("obj1_total_mass"),
-        sum(when(col("mpos") >= col("n1"), col("m_mass"))).as("obj2_total_mass"),
-        avg(when(col("mpos") < col("n1"), col("m_dist"))).as("obj1_dist_dc_pc"),
-        avg(when(col("mpos") >= col("n1"), col("m_dist"))).as("obj2_dist_dc_pc"),
-        avg(col("m_dist")).as("dist_dc_pc"),
-        avg(col("m_dist_rt")).as("dist_dc_r_tidal"),
-        avg(col("m_dist_rhm")).as("dist_dc_r_half_mass"),
-        // all present members inside radius; vacuously true when none
-        // resolved (reference: all() over dict hits, assembler.py:402)
-        coalesce(min(when(col("m_dist_rt").isNotNull,
-          (col("m_dist_rt") <= 1).cast("int"))) === 1, lit(true)).as("is_within_r_tidal"),
-        coalesce(min(when(col("m_dist_rt").isNotNull,
-          (col("m_dist_rt") <= 2).cast("int"))) === 1, lit(true)).as("is_within_2x_r_tidal"))
-      .withColumn("obj1_masses",
-        filter(transform(col("s1"), _.getField("m")), _.isNotNull))
-      .withColumn("obj2_masses",
-        filter(transform(col("s2"), _.getField("m")), _.isNotNull))
-      .drop("s1", "s2")
+    // --- stars -----------------------------------------------------
+    val posvel = expandComPositions(o34d, o9d)
+    val attrs = buildAttrs(f82d, f83d)
+    val stars0 = posvel.join(attrs, KEY :+ "name")
+      .join(broadcast(dc), KEY)
+      .withColumn("dist_dc_pc",
+        distTo(col("density_center"), col("x"), col("y"), col("z")))
+      .withColumn("dist_dc_r_tidal", col("dist_dc_pc") / col("r_tidal"))
+      .withColumn("is_within_r_tidal", col("dist_dc_pc") <= col("r_tidal"))
+      .withColumn("is_within_2x_r_tidal", col("dist_dc_pc") <= col("r_tidal") * 2)
 
-    val binsStats = labeled.join(memberAgg, binKey)
-      .join(broadcast(starStats.select(col("sim_id"), col("time"),
-        col("r_half_mass").as("hm"), col("n_stars_within_2x_r_tidal").as("n2rt"))), KEY)
-      .withColumn("is_multi_system",
-        size(col("obj1_ids")) > 1 || size(col("obj2_ids")) > 1)
-      .withColumn("is_wide_binary_system", Astro.isWideBinary(col("semi")))
-      .withColumn("is_hard_binary_system",
-        Astro.isHardBinary(col("semi"), col("hm"), col("n2rt")))
-      .drop("hm", "n2rt")
+    val stars1 = stars0.join(broadcast(halfMassRadius(stars0)), KEY)
+      .withColumn("dist_dc_r_half_mass", col("dist_dc_pc") / col("r_half_mass"))
+      .withColumnRenamed("tempe", "log_T_eff_K")
+      .withColumnRenamed("zlum", "log_L_L_sol")
+      .withColumnRenamed("rad", "log_R_R_sol")
 
-    // top-level = this system's full id set is not a component of any
-    // other system (reference: assembler.py:438-451)
-    val compSet = binsStats.select(col("sim_id"), col("time"),
-        explode(array(sort_array(col("obj1_ids")), sort_array(col("obj2_ids"))))
-          .as("comp"))
-      .distinct()
-      .withColumn("is_component", lit(true))
-    val binaries = binsStats
-      .withColumn("comp", sort_array(concat(col("obj1_ids"), col("obj2_ids"))))
-      .join(compSet, KEY :+ "comp", "left")
-      .withColumn("is_top_level", col("is_component").isNull)
-      .drop("comp", "is_component")
-
-    // --- star hierarchy labels (reference: assembler.py:589) --------
-    val starPairs = binaries.select(col("sim_id"), col("time"), col("pair"),
+    // star hierarchy labels (reference: assembler.py:589). Every
+    // labeled system of a snapshot that has stars is in `binaries`, so
+    // labeling from `labeled` gives the same hierarchy without making
+    // `stars` depend on `binaries`.
+    val starPairs = labeled.select(col("sim_id"), col("time"), col("pair"),
       explode(concat(col("obj1_ids"), col("obj2_ids"))).as("name"))
     val hier = starPairs.groupBy(KEY.map(col) :+ col("name"): _*)
       .agg(collect_set(col("pair")).as("pairs"))
@@ -268,13 +228,93 @@ object SnapshotAssembler {
           p => struct(length(p).as("l"), p.as("p")))), _.getField("p")))
       .withColumn("is_binary", col("pairs").isNotNull)
       .withColumn("is_multi_system", size(col("hierarchy")) > 2)
-      .drop("pairs", "hier_all", "density_center")
       .select(col("sim_id"), col("time"), col("name"), col("is_binary"),
         col("is_multi_system"), col("hierarchy"),
         col("x"), col("y"), col("z"), col("vx"), col("vy"), col("vz"),
         col("mass"), col("log_T_eff_K"), col("log_L_L_sol"), col("log_R_R_sol"),
         col("dist_dc_pc"), col("dist_dc_r_tidal"), col("dist_dc_r_half_mass"),
         col("is_within_r_tidal"), col("is_within_2x_r_tidal"))
+
+    // per-snapshot star statistics over the final `stars` frame
+    val starStats = stars.groupBy(KEY.map(col): _*).agg(
+        sum(when(col("dist_dc_r_tidal") <= 1, 1L).otherwise(0L)).as("n_stars_within_r_tidal"),
+        sum(when(col("dist_dc_r_tidal") <= 2, 1L).otherwise(0L)).as("n_stars_within_2x_r_tidal"),
+        round(sum("mass"), 4).as("total_mass"),
+        round(sum(when(col("dist_dc_r_tidal") <= 1, col("mass")).otherwise(0.0)), 4)
+          .as("total_mass_within_r_tidal"),
+        round(sum(when(col("dist_dc_r_tidal") <= 2, col("mass")).otherwise(0.0)), 4)
+          .as("total_mass_within_2x_r_tidal"))
+      .join(broadcast(dc.select(col("sim_id"), col("time"),
+        round(col("r_tidal"), 4).as("r_tidal"))), KEY)
+      .join(broadcast(halfMassRadius(stars).select(col("sim_id"), col("time"),
+        round(col("r_half_mass"), 4).as("r_half_mass"))), KEY)
+      .select(col("sim_id"), col("time"), col("r_tidal"), col("r_half_mass"),
+        col("n_stars_within_r_tidal"), col("n_stars_within_2x_r_tidal"),
+        col("total_mass"), col("total_mass_within_r_tidal"),
+        col("total_mass_within_2x_r_tidal"))
+
+    // --- binaries --------------------------------------------------
+    // per-member lookups in one explode + one aggregation (reference
+    // does per-row dict lookups: assembler.py:289,360-418)
+    val binKey = KEY ++ Seq("obj1_name", "obj2_name", "src")
+    val membersE = labeled.select(
+      (binKey.map(col) :+ size(col("obj1_ids")).as("n1") :+
+        posexplode(concat(col("obj1_ids"), col("obj2_ids"))).as(Seq("mpos", "member"))): _*)
+    val starLkp = stars.select(col("sim_id"), col("time"), col("name").as("member"),
+      col("mass").as("m_mass"), col("dist_dc_pc").as("m_dist"),
+      col("dist_dc_r_tidal").as("m_dist_rt"),
+      col("dist_dc_r_half_mass").as("m_dist_rhm"))
+    // members in mpos order: every sum and mean below folds this list
+    def side1(m: Column): Column = m.getField("side1")
+    def field(name: String, keep: Column => Column = _ => lit(true)): Column =
+      transform(filter(col("ms"), keep), _.getField(name))
+    val memberAgg = membersE
+      .join(starLkp, KEY :+ "member", "left")
+      .groupBy(binKey.map(col): _*)
+      .agg(
+        sort_array(collect_list(struct(col("mpos"), (col("mpos") < col("n1")).as("side1"),
+          col("m_mass"), col("m_dist"), col("m_dist_rt"), col("m_dist_rhm")))).as("ms"),
+        // all present members inside radius; vacuously true when none
+        // resolved (reference: all() over dict hits, assembler.py:402)
+        coalesce(min(when(col("m_dist_rt").isNotNull,
+          (col("m_dist_rt") <= 1).cast("int"))) === 1, lit(true)).as("is_within_r_tidal"),
+        coalesce(min(when(col("m_dist_rt").isNotNull,
+          (col("m_dist_rt") <= 2).cast("int"))) === 1, lit(true)).as("is_within_2x_r_tidal"))
+      .select((binKey.map(col) ++ Seq(
+        orderedSum(field("m_mass", side1)).as("obj1_total_mass"),
+        orderedSum(field("m_mass", m => !side1(m))).as("obj2_total_mass"),
+        orderedAvg(field("m_dist", side1)).as("obj1_dist_dc_pc"),
+        orderedAvg(field("m_dist", m => !side1(m))).as("obj2_dist_dc_pc"),
+        orderedAvg(field("m_dist")).as("dist_dc_pc"),
+        orderedAvg(field("m_dist_rt")).as("dist_dc_r_tidal"),
+        orderedAvg(field("m_dist_rhm")).as("dist_dc_r_half_mass"),
+        col("is_within_r_tidal"), col("is_within_2x_r_tidal"),
+        filter(field("m_mass", side1), _.isNotNull).as("obj1_masses"),
+        filter(field("m_mass", m => !side1(m)), _.isNotNull).as("obj2_masses"))): _*)
+
+    val binsStats = labeled.join(memberAgg, binKey)
+      .join(broadcast(starStats.select(col("sim_id"), col("time"),
+        col("r_half_mass").as("hm"), col("n_stars_within_2x_r_tidal").as("n2rt"))), KEY)
+      .withColumn("is_multi_system",
+        size(col("obj1_ids")) > 1 || size(col("obj2_ids")) > 1)
+      .withColumn("is_wide_binary_system", Astro.isWideBinary(col("semi")))
+      .withColumn("is_hard_binary_system",
+        Astro.isHardBinary(col("semi"), col("hm"), col("n2rt")))
+      .drop("hm", "n2rt")
+
+    // top-level = this system's full id set is not a component of any
+    // other system (reference: assembler.py:438-451); the id sets come
+    // from `labeled`, so `binsStats` is not planned twice
+    val compSet = labeled.select(col("sim_id"), col("time"),
+        explode(array(sort_array(col("obj1_ids")), sort_array(col("obj2_ids"))))
+          .as("comp"))
+      .distinct()
+      .withColumn("is_component", lit(true))
+    val binaries = binsStats
+      .withColumn("comp", sort_array(concat(col("obj1_ids"), col("obj2_ids"))))
+      .join(compSet, KEY :+ "comp", "left")
+      .withColumn("is_top_level", col("is_component").isNull)
+      .drop("comp", "is_component")
 
     // --- headers ---------------------------------------------------
     val binStats = binaries.groupBy(KEY.map(col): _*).agg(

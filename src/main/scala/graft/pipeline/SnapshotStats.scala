@@ -4,6 +4,7 @@ import graft.functions.Astro
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Snapshot statistics over the ASSEMBLED tables (reference:
   * src/nbody6/data/snapshot.py _calc_stats / _calc_annular_stats,
@@ -261,13 +262,30 @@ object SnapshotStats {
   /** Write the assembled tables partitioned by sim_id — the 100 TB
     * layout (SURVEY §3/§4): partition pruning on sim_id, row-group
     * min/max pruning on time within each file.
+    *
+    * The tables are a chain (SnapshotAssembler.assemble): `binaries`
+    * reads `stars`, and `headers` reads both. So `stars` and then
+    * `binaries` are persisted before the writes, and Spark's
+    * CacheManager swaps each pinned frame into the later plans: every
+    * table is computed once, and the block text is not parsed again
+    * for each write. This is reuse within this one call, not caching
+    * of results across runs: the `finally` unpersists exactly the
+    * entries this call added. A frame the caller already pinned
+    * (storageLevel != NONE) is neither pinned again nor released.
     */
   def writePartitioned(assembled: Assembled, path: String): Unit = {
-    assembled.stars.write.partitionBy("sim_id").mode("overwrite")
-      .parquet(s"$path/stars")
-    assembled.binaries.write.partitionBy("sim_id").mode("overwrite")
-      .parquet(s"$path/binaries")
-    assembled.headers.write.partitionBy("sim_id").mode("overwrite")
-      .parquet(s"$path/headers")
+    val pinned = Seq(assembled.stars, assembled.binaries)
+      .filter(_.storageLevel == StorageLevel.NONE)
+    try {
+      pinned.foreach(_.persist())
+      def write(df: DataFrame, table: String): Unit =
+        df.write.partitionBy("sim_id").mode("overwrite").parquet(s"$path/$table")
+      write(assembled.stars, "stars")
+      write(assembled.binaries, "binaries")
+      write(assembled.headers, "headers")
+    } finally {
+      // binaries' cached plan reads stars' cache: release it first
+      pinned.reverse.foreach(_.unpersist(blocking = true))
+    }
   }
 }

@@ -23,11 +23,11 @@ final case class BlockConfig(
   * src/nbody6/parser/base.py:241 _iter_block).
   *
   * Scale design: one NBODY6 run emits one modest file per format, but a
-  * survey has thousands of runs — the parallel unit is the FILE
-  * (binaryFile datasource -> flatMap blocks), and `sim_id` (parent
-  * directory name) + block `time` become the partition keys of
-  * everything downstream. Block boundaries never straddle a split
-  * because each task owns whole files.
+  * survey has thousands of runs — files are never split (binaryFiles ->
+  * flatMap blocks), and `sim_id` (parent directory name) + block `time`
+  * become the partition keys of everything downstream. Block boundaries
+  * never straddle a split because each task owns whole files; see
+  * `read` for how many files a task owns.
   */
 object BlockText {
 
@@ -107,9 +107,13 @@ object BlockText {
     // binaryFiles streams bytes instead of materializing each file as
     // one String (wholeTextFiles): with the incremental blockIter a
     // task's footprint is one PARSED block set, not 2x the raw text —
-    // the robust shape for an occasional multi-GB run file. The
-    // parallel unit stays the file, so block boundaries never straddle
-    // a split.
+    // the robust shape for an occasional multi-GB run file. A split
+    // holds whole files, so block boundaries never straddle one; but it
+    // is not one file per task: binaryFiles caps a split at
+    // (total bytes + spark.files.openCostInBytes per file) / default
+    // parallelism, at least the open cost (4 MB by default), and fills
+    // it with whole files by their actual size. So 16 files of ~50 KB
+    // on 4 cores are read by ONE task; files of megabytes spread out.
     val files = spark.sparkContext.binaryFiles(glob)
     val parsed = files.map { case (path, pds) =>
       val simId =

@@ -102,7 +102,8 @@ class NBody6Spec extends SparkSpec {
     d
   }
 
-  private lazy val assembled: graft.pipeline.Assembled = {
+  /** Fresh frames over the fixture files: each call plans anew. */
+  private def assembleFixtures(): graft.pipeline.Assembled = {
     val g = root.toString
     val (o34h, o34d) = NBody6.readOut34(spark, s"$g/*/OUT34")
     val (_, o9d) = NBody6.readOut9(spark, s"$g/*/OUT9")
@@ -112,6 +113,8 @@ class NBody6Spec extends SparkSpec {
     val dcH = NBody6.readDensCentre(spark, s"$g/*/densCentre.txt")
     SnapshotAssembler.assemble(o34h, o34d, o9d, f82d, f83d, f19d, dcH)
   }
+
+  private lazy val assembled: graft.pipeline.Assembled = assembleFixtures()
 
   test("parsers read every block of every file with sim_id and time keys") {
     val (o34h, o34d) = NBody6.readOut34(spark, s"$root/*/OUT34")
@@ -158,6 +161,28 @@ class NBody6Spec extends SparkSpec {
     assert(byPair("5+(11+12)").getAs[scala.collection.Seq[Double]]("obj1_masses").toSeq ==
       Seq(starMass(11), starMass(12)))
     assert(byPair("5+(11+12)").getAs[Double]("obj2_total_mass") == starMass(5))
+  }
+
+  test("binaries are bit-identical at 1 and at 4 shuffle partitions") {
+    // member sums and means fold each system's members in mpos order, so
+    // no value may depend on the order a shuffle delivers the rows;
+    // coalescing is off so that 4 partitions stay 4
+    val confs = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    def binariesAt(partitions: Int): Seq[String] = {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      assembleFixtures().binaries.collect().map(_.toString).sorted.toSeq
+    }
+    try {
+      val one = binariesAt(1)
+      assert(one.nonEmpty)
+      assert(binariesAt(4) == one)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("kepler semi-major axis computed from period") {

@@ -1,17 +1,24 @@
 package graft
 
-import graft.pipeline.{PseudoObserver, SnapshotAssembler, SnapshotStats}
+import graft.pipeline.{Assembled, PseudoObserver, SnapshotAssembler, SnapshotStats}
 import graft.sources.NBody6
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class SnapshotStatsSpec extends SparkSpec {
   import NBody6Fixtures._
 
-  private lazy val assembled = {
+  private lazy val fixtures = {
     val d = Files.createTempDirectory("nbody6_stats_fixtures")
     NBody6Fixtures.write(d)
-    val g = d.toString
+    d.toString
+  }
+
+  /** Fresh frames over the fixture files: each call plans anew. */
+  private def assembleFixtures(): Assembled = {
+    val g = fixtures
     val (o34h, o34d) = NBody6.readOut34(spark, s"$g/*/OUT34")
     val (_, o9d) = NBody6.readOut9(spark, s"$g/*/OUT9")
     val (_, f82d) = NBody6.readFort82(spark, s"$g/*/fort.82")
@@ -20,6 +27,8 @@ class SnapshotStatsSpec extends SparkSpec {
     val dcH = NBody6.readDensCentre(spark, s"$g/*/densCentre.txt")
     SnapshotAssembler.assemble(o34h, o34d, o9d, f82d, f83d, f19d, dcH)
   }
+
+  private lazy val assembled = assembleFixtures()
 
   test("overall stats: one row per snapshot, masked counts consistent") {
     val s = SnapshotStats.overallStats(assembled)
@@ -109,7 +118,6 @@ class SnapshotStatsSpec extends SparkSpec {
   }
 
   test("partitioned write round-trips through Assembled.load with pruning") {
-    import graft.pipeline.Assembled
     val out = Files.createTempDirectory("graft_partitioned").toString
     SnapshotStats.writePartitioned(assembled, out)
     val loaded = Assembled.load(spark, out)
@@ -125,7 +133,7 @@ class SnapshotStatsSpec extends SparkSpec {
     // (tolerance compare: streaming stddev merges are partition-order
     // sensitive in the last ulps, so bit-exact exceptAll would flake)
     val a = SnapshotStats.overallStats(assembled)
-    def keyed(df: org.apache.spark.sql.DataFrame) =
+    def keyed(df: DataFrame) =
       df.select(a.columns.map(col): _*).collect()
         .map(r => (r.getAs[String]("sim_id"), r.getAs[Double]("time")) -> r).toMap
     val aRows = keyed(a)
@@ -143,6 +151,39 @@ class SnapshotStatsSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  /** A frame's rows in the given column order, rendered and sorted. */
+  private def rows(df: DataFrame, cols: Seq[String]): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+
+  test("partitioned write pins only within the call and writes the frames' rows") {
+    val a = assembleFixtures()
+    val out = Files.createTempDirectory("graft_write_scope").toString
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    SnapshotStats.writePartitioned(a, out)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore,
+      "the writer left persisted RDDs behind")
+    Seq(a.stars, a.binaries, a.headers).foreach(df =>
+      assert(df.storageLevel == StorageLevel.NONE, "the writer left a frame cached"))
+    val loaded = Assembled.load(spark, out)
+    Seq(("stars", a.stars, loaded.stars), ("binaries", a.binaries, loaded.binaries),
+      ("headers", a.headers, loaded.headers)).foreach { case (name, frame, back) =>
+      assert(rows(back, frame.columns.toSeq) == rows(frame, frame.columns.toSeq),
+        s"$name read back differs from the unpinned frame")
+    }
+  }
+
+  test("partitioned write keeps a frame the caller pinned") {
+    val a = assembleFixtures()
+    val out = Files.createTempDirectory("graft_write_pinned").toString
+    a.stars.persist(StorageLevel.MEMORY_ONLY)
+    try {
+      SnapshotStats.writePartitioned(a, out)
+      assert(a.stars.storageLevel == StorageLevel.MEMORY_ONLY)
+      assert(a.binaries.storageLevel == StorageLevel.NONE)
+      assert(Assembled.load(spark, out).binaries.count() == a.binaries.count())
+    } finally a.stars.unpersist(blocking = true)
   }
 
   test("timestamp stats: count/min/max/mean-step per sim") {
