@@ -2,17 +2,20 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Exact
+import graft.streaming.Replay
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Event-stream operators (SURVEY.md §2 q37–q38).
+/** Event-stream queries: batch sessionization and CDC (q37, q49, q66,
+  * q126, q146) and the streaming families, each of which replays the
+  * events file as a stream and is gated against the batch SQL that
+  * computes the same set: stream/batch parity on one logical plan.
   *
-  * q37 is classic gap-based sessionization as a batch window pass; q38
-  * runs the SAME tumbling-window aggregation through Structured
-  * Streaming (readStream -> window agg -> memory sink) and returns the
-  * sink table — its oracle is the batch-equivalent SQL, which is the
-  * whole point: stream/batch parity on one logical plan.
+  * Every streaming query runs through [[graft.streaming.Replay]]: one
+  * memory-sink path (sink named, its view dropped, the query stopped)
+  * and one conf scope, where each query states its no-data-batch value
+  * as a literal and the session conf is restored on exit.
   */
 object SessionOps extends QueryModule {
 
@@ -62,23 +65,6 @@ object SessionOps extends QueryModule {
       |FROM s GROUP BY user_id, sess_idx
       |ORDER BY user_id, sess_idx""".stripMargin
 
-  /** Micro-batch replay parallelism: every stateful streaming operator
-    * commits one state store per shuffle partition per micro-batch, so
-    * the replay harness's tiny batches are dominated by state-store
-    * overhead at the session's scan-sized partition count (measured:
-    * q70 drops ~3.5x going 32 -> 8 partitions at sf0.1). Production
-    * streams size shuffle partitions to state volume ONCE — the count
-    * is baked into the checkpoint for the query's lifetime — so a
-    * deliberate, smaller-than-batch setting is the realistic shape.
-    * Scoped to the query; the session value is restored afterward.
-    */
-  private def withStreamParallelism[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, math.min(8, prev.toInt).toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
   /** q38: Structured Streaming tumbling-window aggregation — the
     * events parquet replayed as a stream, 1-hour windows per event
     * type, complete-mode memory sink. The oracle is the identical
@@ -86,20 +72,12 @@ object SessionOps extends QueryModule {
     * At scale this is the same plan with a kafka source + watermark
     * (see graft.streaming.StreamAgg for the watermarked variant).
     */
-  def q38StreamWindowAgg(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q38StreamWindowAgg(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamAgg
-    val sinkName = "q38_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val stream = StreamAgg.hourlyTypeAgg(
       StreamAgg.parquetStream(spark, s"$dir/events.parquet"))
-    val q = stream.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("complete")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("event_type", "win_start")
+    Replay.toMemory(stream, "complete", noDataBatches = true)
+      .orderBy("event_type", "win_start")
   }
 
   val q38Sql: String =
@@ -118,18 +96,12 @@ object SessionOps extends QueryModule {
     * last" — deterministic and SQL-expressible, which is what makes a
     * stateful streaming operator oracle-checkable at all.
     */
-  def q39StreamSessionize(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q39StreamSessionize(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamSessionize}
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
       .withWatermark("ts", "0 seconds")
-    val sinkName = "q39_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamSessionize.sessionize(stream, GAP_MINUTES)
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName)
+    Replay.toMemory(StreamSessionize.sessionize(stream, GAP_MINUTES), "append",
+        noDataBatches = false)
       .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"),
         // The state sums doubles in deterministic (ts-sorted) order; the
         // true per-session sum of 2 dp values is exactly 2 dp, so the
@@ -206,19 +178,11 @@ object SessionOps extends QueryModule {
     * deterministically min by (event time, event_id) — exactly the
     * batch arg_min the oracle computes.
     */
-  def q51StreamDedup(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q51StreamDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamDedup}
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    // fixed sink name, prior run's table dropped: repeated invocations
-    // (Bench runs every query 4x) must not accumulate memory sinks
-    val sinkName = "q51_sink"
-    spark.catalog.dropTempView(sinkName)
-    val q = StreamDedup.dedup(stream)
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("user_id", "event_type")
+    Replay.toMemory(StreamDedup.dedup(stream), "append", noDataBatches = true)
+      .orderBy("user_id", "event_type")
   }
 
   val q51Sql: String =
@@ -242,12 +206,9 @@ object SessionOps extends QueryModule {
     * columns: the emitted KEY SET is deterministic (one row per
     * distinct key) and equals the batch DISTINCT the oracle computes.
     */
-  def q102StreamDropdupWm(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q102StreamDropdupWm(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamAgg
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q102_sink"
-    spark.catalog.dropTempView(sinkName)
     val deduped = stream
       // project BEFORE the dedup: state stores whole rows, so carrying
       // value/props/event_id through would multiply the state size
@@ -257,11 +218,8 @@ object SessionOps extends QueryModule {
       .dropDuplicatesWithinWatermark("user_id", "event_type", "minute")
       .select(col("user_id"), col("event_type"),
         date_format(col("minute"), "yyyy-MM-dd HH:mm:ss").as("minute"))
-    val q = deduped.writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("user_id", "event_type", "minute")
+    Replay.toMemory(deduped, "append", noDataBatches = true)
+      .orderBy("user_id", "event_type", "minute")
   }
 
   val q102Sql: String =
@@ -276,17 +234,12 @@ object SessionOps extends QueryModule {
     * Oracle = the identical batch join+agg: stream/batch parity again.
     * See [[graft.streaming.StreamEnrich]] for the scale shape.
     */
-  def q56StreamEnrich(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q56StreamEnrich(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamEnrich}
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q56_sink"
-    spark.catalog.dropTempView(sinkName)
-    val q = StreamEnrich.segmentTypeAgg(stream, Tables(spark, dir).customer)
-      .writeStream.format("memory").queryName(sinkName).outputMode("complete").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("segment", "event_type")
+    Replay.toMemory(StreamEnrich.segmentTypeAgg(stream, Tables(spark, dir).customer),
+        "complete", noDataBatches = true)
+      .orderBy("segment", "event_type")
   }
 
   val q56Sql: String =
@@ -305,18 +258,13 @@ object SessionOps extends QueryModule {
     * the interval bound). One micro-batch replay makes the emitted set
     * exactly the batch interval join. See [[graft.streaming.StreamJoin]].
     */
-  def q59StreamStreamJoin(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q59StreamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamJoin}
     val clicks = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
     val purchases = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q59_sink"
-    spark.catalog.dropTempView(sinkName)
-    val q = StreamJoin.clickPurchase(clicks, purchases, ATTRIB_HOURS)
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("user_id", "click_id", "purchase_id")
+    Replay.toMemory(StreamJoin.clickPurchase(clicks, purchases, ATTRIB_HOURS),
+        "append", noDataBatches = true)
+      .orderBy("user_id", "click_id", "purchase_id")
   }
 
   /** q278: STREAMING LEFT-OUTER ATTRIBUTION (fifteenth stateful
@@ -334,85 +282,66 @@ object SessionOps extends QueryModule {
     * by window + watermark delay, unmatched clicks become first-class
     * rows a downstream "lost demand" rollup can consume directly.
     */
-  def q278StreamOuterJoin(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q278StreamOuterJoin(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamJoin}
-    // round 10: the flush protocol below is explicitly no-data-batch
-    // free ("no reliance on no-data batches"), but the session-level
-    // flag is toggled by OTHER streaming queries — inheriting `true`
-    // adds no-data micro-batches whose only effect here is extra
-    // state-store commit rounds (8 partitions x 4 join stores each).
-    // Pin it off for THIS query and restore on exit (leaking `false`
-    // into the session would couple every later query's behavior to
-    // this one's — the exact inheritance hazard being fixed).
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = spark.conf.get(ndKey)
-    spark.conf.set(ndKey, "false")
-    try {
     val bound = graft.Tables(spark, dir).events
       .agg(max(col("ts")) - expr(s"INTERVAL ${ATTRIB_HOURS + 1} HOURS"))
       .collect()(0).getTimestamp(0)
     val (clicks, cDir) = StreamAgg.parquetStreamWithDir(spark, s"$dir/events.parquet")
     val (purchases, pDir) = StreamAgg.parquetStreamWithDir(spark, s"$dir/events.parquet")
-    val sinkName = "q278_sink"
-    spark.catalog.dropTempView(sinkName)
-    val q = StreamJoin.clickPurchaseOuter(clicks, purchases, ATTRIB_HOURS, bound)
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
+    // Outer rows emit on STATE EXPIRY, which needs the watermark to
+    // advance past the fixture's tail — and the engine's trailing
+    // no-data micro-batch races processAllAvailable. Deterministic
+    // flush instead, so no-data batches are off: on, their only effect
+    // here is extra state-store commit rounds (8 partitions x 4 join
+    // stores each). Two subtleties:
+    //  1. Catalyst pushes each side's event_type equality BELOW the
+    //     EventTimeWatermark operator (it doesn't reference the
+    //     event-time column), all the way into the parquet scan — so
+    //     a sentinel of a made-up type would be dropped before ever
+    //     reaching either watermark operator. Each flush file
+    //     therefore carries one far-future 'click' AND one
+    //     far-future 'purchase': each survives its side's scan
+    //     filter and advances that side's watermark. The click
+    //     sentinel is then dropped by the ts <= bound filter (which
+    //     stays ABOVE the watermark — it references ts) before the
+    //     join; the purchase sentinel enters right-side state but, in
+    //     a left-outer join, an unmatched right row never emits.
+    //  2. Eviction in batch N uses the watermark computed from batch
+    //     N-1's data, so ONE flush batch only records the new max —
+    //     a SECOND flush batch performs the eviction that emits the
+    //     outer rows. processAllAvailable after each write makes the
+    //     sequence deterministic (no reliance on no-data batches).
+    def writeFlush(baseRow: DataFrame, year: Int, tag: String): Unit = {
+      val farUs = java.sql.Timestamp.valueOf(s"$year-01-01 00:00:00")
+      val stamped = baseRow.schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType =>
+          baseRow.withColumn("ts", lit(farUs.getTime * 1000000L))
+        case _ => baseRow.withColumn("ts", lit(farUs))
+      }
+      val rows = stamped.withColumn("event_type", lit("click"))
+        .union(stamped.withColumn("event_type", lit("purchase")))
+      val tmp = java.nio.file.Paths.get(graft.queries.Scratch.dir("graft_flush"))
+      rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.toFile.listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .get.toPath
+      Seq(cDir, pDir).foreach { d =>
+        java.nio.file.Files.copy(part,
+          java.nio.file.Paths.get(d, s"$tag.parquet"))
+      }
+    }
+    Replay.toMemory(StreamJoin.clickPurchaseOuter(clicks, purchases, ATTRIB_HOURS, bound),
+        "append", noDataBatches = false, drive = { q =>
       q.processAllAvailable()
-      // Outer rows emit on STATE EXPIRY, which needs the watermark to
-      // advance past the fixture's tail — and the engine's trailing
-      // no-data micro-batch races processAllAvailable. Deterministic
-      // flush instead. Two subtleties:
-      //  1. Catalyst pushes each side's event_type equality BELOW the
-      //     EventTimeWatermark operator (it doesn't reference the
-      //     event-time column), all the way into the parquet scan — so
-      //     a sentinel of a made-up type would be dropped before ever
-      //     reaching either watermark operator. Each flush file
-      //     therefore carries one far-future 'click' AND one
-      //     far-future 'purchase': each survives its side's scan
-      //     filter and advances that side's watermark. The click
-      //     sentinel is then dropped by the ts <= bound filter (which
-      //     stays ABOVE the watermark — it references ts) before the
-      //     join; the purchase sentinel enters right-side state but, in
-      //     a left-outer join, an unmatched right row never emits.
-      //  2. Eviction in batch N uses the watermark computed from batch
-      //     N-1's data, so ONE flush batch only records the new max —
-      //     a SECOND flush batch performs the eviction that emits the
-      //     outer rows. processAllAvailable after each write makes the
-      //     sequence deterministic (no reliance on no-data batches).
-      // one row read once, reused by both flush batches (round 10:
-      // was a fresh scan-and-limit job per flush)
+      // one row read once, reused by both flush batches
       val baseRow = spark.read.parquet(s"$dir/events.parquet").limit(1)
         .localCheckpoint(true)
-      def writeFlush(year: Int, tag: String): Unit = {
-        val base = baseRow
-        val farUs = java.sql.Timestamp.valueOf(s"$year-01-01 00:00:00")
-        val stamped = base.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            base.withColumn("ts", lit(farUs.getTime * 1000000L))
-          case _ => base.withColumn("ts", lit(farUs))
-        }
-        val rows = stamped.withColumn("event_type", lit("click"))
-          .union(stamped.withColumn("event_type", lit("purchase")))
-        val tmp = java.nio.file.Paths.get(graft.queries.Scratch.dir("graft_flush"))
-        rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.toFile.listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .get.toPath
-        Seq(cDir, pDir).foreach { d =>
-          java.nio.file.Files.copy(part,
-            java.nio.file.Paths.get(d, s"$tag.parquet"))
-        }
-      }
-      writeFlush(2035, "zz_flush1")
+      writeFlush(baseRow, 2035, "zz_flush1")
       q.processAllAvailable()
-      writeFlush(2036, "zz_flush2")
+      writeFlush(baseRow, 2036, "zz_flush2")
       q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sinkName).orderBy("user_id", "click_id", "purchase_id")
-    } finally spark.conf.set(ndKey, ndPrev)
+    }).orderBy("user_id", "click_id", "purchase_id")
   }
 
   val q278Sql: String =
@@ -498,24 +427,17 @@ object SessionOps extends QueryModule {
   /** q70: exact windowed distinct-user counts as a CHAINED stateful
     * streaming query — dropDuplicates state feeding a windowed
     * aggregation (see [[graft.streaming.StreamDistinct]]). Append mode
-    * emits a window once the watermark passes its end; no-data
-    * micro-batches are explicitly enabled (q39/q51 disable them
-    * session-wide) so the final watermark advance flushes every closed
-    * window, leaving exactly the still-open tail unemitted — the
-    * deterministic set the batch oracle reproduces.
+    * emits a window once the watermark passes its end; the replay runs
+    * with no-data micro-batches on, so the final watermark advance
+    * flushes every closed window, leaving exactly the still-open tail
+    * unemitted — the deterministic set the batch oracle reproduces.
     */
-  def q70StreamDistinct(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q70StreamDistinct(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamDistinct}
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q70_sink"
-    spark.catalog.dropTempView(sinkName)
-    val q = StreamDistinct.windowedDistinct(stream)
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("win_start", "event_type")
+    Replay.toMemory(StreamDistinct.windowedDistinct(stream), "append",
+        noDataBatches = true)
+      .orderBy("win_start", "event_type")
   }
 
   val q70Sql: String =
@@ -536,18 +458,11 @@ object SessionOps extends QueryModule {
     * cross-engine contract; the stream's estimate quality travels as
     * the 3-SE bound flag (lgK=12 ⇒ ~1.6% SE ⇒ 5% at 3 SE).
     */
-  def q325StreamSketchDistinct(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q325StreamSketchDistinct(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamSketch}
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q325_sink_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamSketch.windowedSketchDistinct(stream)
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
+    val estimates = Replay.toMemory(StreamSketch.windowedSketchDistinct(stream),
+      "append", noDataBatches = true)
     // exact side recomputed RELATIONALLY (one batch pass) — the gate
     // needs the truth, not a second streaming run
     val ev = Tables(spark, dir).events
@@ -561,7 +476,7 @@ object SessionOps extends QueryModule {
       .filter(col("w") + expr("INTERVAL 1 HOUR") <= col("mx"))
       .select(date_format(col("w"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("n_exact"))
-    spark.table(sinkName)
+    estimates
       .join(exact, Seq("win_start", "event_type"))
       .select(col("win_start"), col("event_type"), col("n_exact"),
         (abs(col("n_est") - col("n_exact")) <= col("n_exact") * 0.05)
@@ -589,22 +504,14 @@ object SessionOps extends QueryModule {
     * is checked against its own engineering bound (3n/k + |levels|),
     * recomputed relationally on the batch side.
     */
-  def q339StreamQuantile(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q339StreamQuantile(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.QuantileSketch
     import graft.streaming.{StreamAgg, StreamQuantile}
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q339_sink_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamQuantile.windowedSketchQuantile(stream)
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
     // emitted sketches are |closed windows x types| rows (calendar-
     // bounded), so the driver-side estimate extraction is K-bounded
-    val ests = spark.table(sinkName).collect().map { r =>
+    val ests = Replay.toMemory(StreamQuantile.windowedSketchQuantile(stream),
+        "append", noDataBatches = true).collect().map { r =>
       val sk = QuantileSketch.fromRow(r.getStruct(2))
       (r.getString(0), r.getString(1), sk.quantile(0.5), sk.n,
         QuantileSketch.rankErrorBound(sk))
@@ -650,18 +557,12 @@ object SessionOps extends QueryModule {
     * window whose END precedes the max timestamp — the still-open tail
     * stays in state, exactly what the oracle pins.
     */
-  def q167StreamTopk(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q167StreamTopk(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamTopK}
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
       .withWatermark("ts", "0 seconds")
-    val sinkName = "q167_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamTopK.windowedTopK(stream)
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("win_start_us", "rank")
+    Replay.toMemory(StreamTopK.windowedTopK(stream), "append", noDataBatches = true)
+      .orderBy("win_start_us", "rank")
   }
 
   val q167Sql: String =
@@ -687,17 +588,11 @@ object SessionOps extends QueryModule {
     * retract, so emission is immediate and the replayed set equals the
     * batch row_number formulation the oracle states.
     */
-  def q185StreamThrottle(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q185StreamThrottle(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamThrottle}
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q185_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamThrottle.throttle(stream)
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("user_id", "win_start_us", "seq")
+    Replay.toMemory(StreamThrottle.throttle(stream), "append", noDataBatches = false)
+      .orderBy("user_id", "win_start_us", "seq")
   }
 
   val q185Sql: String =
@@ -723,17 +618,11 @@ object SessionOps extends QueryModule {
     * primitive that q91 (last-click only) and q59 (symmetric interval
     * join) don't express. Oracle = the batch interval self-join.
     */
-  def q194StreamCep(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q194StreamCep(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamCep}
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q194_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamCep.matchPairs(stream)
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("user_id", "click_id", "purchase_id")
+    Replay.toMemory(StreamCep.matchPairs(stream), "append", noDataBatches = false)
+      .orderBy("user_id", "click_id", "purchase_id")
   }
 
   val q194Sql: String =
@@ -756,17 +645,12 @@ object SessionOps extends QueryModule {
     * emitted set equals the batch window formulation exactly (see
     * [[graft.streaming.StreamFunnel]]).
     */
-  def q91StreamFunnel(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q91StreamFunnel(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamFunnel}
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q91_sink"
-    spark.catalog.dropTempView(sinkName)
-    val q = StreamFunnel.attribute(stream, ATTRIB_HOURS * 3600L * 1000000L)
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("user_id", "event_id")
+    Replay.toMemory(StreamFunnel.attribute(stream, ATTRIB_HOURS * 3600L * 1000000L),
+        "append", noDataBatches = true)
+      .orderBy("user_id", "event_id")
   }
 
   val q91Sql: String =
@@ -792,21 +676,15 @@ object SessionOps extends QueryModule {
     * replay emits exactly the closed rows of the batch q110
     * formulation, which is the oracle.
     */
-  def q113StreamScd2(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q113StreamScd2(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamScd2}
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
       .select(col("user_id"), col("event_id"), col("ts"),
         from_json(col("props"),
           org.apache.spark.sql.types.StructType.fromDDL("k INT"))
           .getField("k").cast("long").as("attr"))
-    val sinkName = "q113_sink"
-    spark.catalog.dropTempView(sinkName)
-    val q = StreamScd2.closedVersions(stream)
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("user_id", "valid_from_us", "attr")
+    Replay.toMemory(StreamScd2.closedVersions(stream), "append", noDataBatches = true)
+      .orderBy("user_id", "valid_from_us", "attr")
   }
 
   val q113Sql: String =
@@ -846,8 +724,7 @@ object SessionOps extends QueryModule {
     * replay chunked the data.
     */
   def q124StreamIncrView(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
-    import graft.functions.Exact
+      Replay.scope(spark, noDataBatches = true) {
     val tmp = java.nio.file.Paths.get(graft.queries.Scratch.dir("graft_q124"))
     val src = tmp.resolve("src").toString
     val view = tmp.resolve("view").toString
@@ -962,17 +839,11 @@ object SessionOps extends QueryModule {
     * rollup), this is the alert-at-ingest shape: the score uses only
     * what a live pipeline would have seen at that moment.
     */
-  def q145StreamAnomaly(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q145StreamAnomaly(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamAnomaly}
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q145_sink"
-    spark.catalog.dropTempView(sinkName)
-    val q = StreamAnomaly.detect(stream)
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("event_id")
+    Replay.toMemory(StreamAnomaly.detect(stream), "append", noDataBatches = true)
+      .orderBy("event_id")
   }
 
   val q145Sql: String = {
@@ -1057,19 +928,11 @@ object SessionOps extends QueryModule {
     * full-log rescan per refresh. Oracle = the batch min-day
     * formulation with the same horizon.
     */
-  def q309StreamRetention(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q309StreamRetention(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamRetention}
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q309_sink_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamRetention.firstSeen(stream).toDF()
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName)
+    Replay.toMemory(StreamRetention.firstSeen(stream), "append",
+        noDataBatches = false)
       .groupBy("cohort_day", "day_offset")
       .agg(count(lit(1)).as("n_users"))
       .orderBy("cohort_day", "day_offset")
@@ -1098,18 +961,11 @@ object SessionOps extends QueryModule {
     * sequential fold and the window formulation are provably the same
     * function of the log.
     */
-  def q353StreamCusum(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q353StreamCusum(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamCusum}
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName = "q353_sink"
-    spark.catalog.dropTempView(sinkName)
-    val q = StreamCusum.monitor(stream)
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("event_type")
+    Replay.toMemory(StreamCusum.monitor(stream), "append", noDataBatches = true)
+      .orderBy("event_type")
   }
 
   val q353Sql: String = {
@@ -1161,18 +1017,11 @@ object SessionOps extends QueryModule {
     * oracle is the batch fold q306 runs, re-keyed to this output
     * order: the sequential per-key fold IS the stream's semantics.
     */
-  def q381StreamDebounce(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q381StreamDebounce(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamDebounce}
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName =
-      "q381_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamDebounce.debounce(stream)
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("user_id", "event_type", "event_id")
+    Replay.toMemory(StreamDebounce.debounce(stream), "append", noDataBatches = true)
+      .orderBy("user_id", "event_type", "event_id")
   }
 
   val q381Sql: String = {
@@ -1207,18 +1056,11 @@ object SessionOps extends QueryModule {
     * (id, tokens-left) pairs — the STRUCT-accumulator dodge q306
     * documented for DuckDB 1.0).
     */
-  def q392StreamTokenBucket(spark: SparkSession, dir: String): DataFrame =
-      withStreamParallelism(spark) {
+  def q392StreamTokenBucket(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{StreamAgg, StreamTokenBucket}
     val stream = StreamAgg.parquetStream(spark, s"$dir/events.parquet")
-    val sinkName =
-      "q392_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamTokenBucket.limit(stream)
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sinkName).orderBy("user_id", "event_id")
+    Replay.toMemory(StreamTokenBucket.limit(stream), "append", noDataBatches = true)
+      .orderBy("user_id", "event_id")
   }
 
   val q392Sql: String = {

@@ -1011,22 +1011,15 @@ object StatsOps extends QueryModule {
     * percentile CI over the replicates (b = -2 lo, -3 hi; Spark
     * `percentile` == DuckDB `quantile_cont`) run on those BOOT_B rows.
     * At 100 TB: one scan, one 1-row shuffle, 2*B+2 integer sums.
-    */
-  /** The fold is 33 input fields + 66 aggregation buffers — past the
+    *
+    * The fold is 33 input fields + 66 aggregation buffers — past the
     * default spark.sql.codegen.maxFields=100, which silently drops the
     * whole stage to interpreted row-at-a-time aggregation (measured
-    * ~2.5x on this query). Scoped to the query; session value
-    * restored.
+    * ~2.5x on this query). Raised for this query only; the session
+    * conf is restored on exit.
     */
-  private def withWideCodegen[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.codegen.maxFields"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "300")
-    try body finally spark.conf.set(key, prev)
-  }
-
   def q148BootstrapCi(spark: SparkSession, dir: String): DataFrame =
-      withWideCodegen(spark) {
+      graft.streaming.Replay.withConf(spark, "spark.sql.codegen.maxFields" -> "300") {
     val base = Tables(spark, dir).orders
       .select(col("o_orderkey"),
         floor(col("o_totalprice") * lit(100) + lit(0.5)).cast("long")

@@ -46,7 +46,6 @@ object StreamAgg {
     * engine's trailing no-data micro-batch races processAllAvailable.
     */
   def parquetStreamWithDir(spark: SparkSession, path: String): (DataFrame, String) = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(path).schema
     import java.nio.file.{Files, Paths}
     val f = new java.io.File(path)

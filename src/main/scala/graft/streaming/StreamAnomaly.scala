@@ -52,9 +52,6 @@ object StreamAnomaly {
 
   def unit(v: Double): Long = math.floor(v * 1e4 + 0.5).toLong
 
-  def tsUs(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   /** z-score of unit value v against prior moments, in micro-units;
     * None when the prior variance is zero / not positive.
     */

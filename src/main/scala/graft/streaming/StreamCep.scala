@@ -46,9 +46,6 @@ object StreamCep {
   implicit val stEnc: Encoder[CepState] = Encoders.kryo[CepState]
   implicit val longEnc: Encoder[Long] = Encoders.scalaLong
 
-  def tsUs(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   /** Pure transition: fold a batch into (pending clicks, buffered
     * purchases), emitting matches.
     */

@@ -65,9 +65,6 @@ object StreamCusum {
 
   def unit(v: Double): Long = math.floor(v * 1e4 + 0.5).toLong
 
-  def tsUs(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   /** Core transition: fold one type's batch (sorted by event time,
     * ties by event_id) through (C, runmin, argmin); emit the alarm at
     * the first S ≥ h crossing and latch.

@@ -53,9 +53,6 @@ object StreamDebounce {
   implicit val keyEnc: Encoder[(Long, String)] =
     Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
 
-  def tsUs(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   /** Pure transition: fold one key's batch from `last` (last kept
     * event-time in µs, [[NO_LAST]] when none yet).
     */

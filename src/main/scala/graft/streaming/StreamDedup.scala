@@ -35,9 +35,6 @@ object StreamDedup {
   implicit val keyEnc: Encoder[(Long, String)] =
     Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
 
-  def tsUs(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   /** Epoch microseconds of 2024-01-01 UTC — baseline for the packed
     * (timestamp, sequence) order key shared with the q49/q51 oracles.
     * The packing assumes event_id < 2^20 and a timestamp span under

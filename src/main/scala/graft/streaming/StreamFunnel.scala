@@ -35,9 +35,6 @@ object StreamFunnel {
   implicit val conversionEnc: Encoder[Conversion] = Encoders.product[Conversion]
   implicit val longEnc: Encoder[Long] = Encoders.scalaLong
 
-  def tsUs(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   /** Apply to a (possibly streaming) events DataFrame with `user_id`,
     * `event_type`, `ts`, `event_id` columns.
     */

@@ -47,8 +47,8 @@ object StreamScd2 {
       : (Seq[ClosedVersion], Option[AttrVersionState]) = {
     var state = prior
     val closed = scala.collection.mutable.ArrayBuffer[ClosedVersion]()
-    events.sortBy(e => (StreamSessionize.tsUs(e.ts), e.event_id)).foreach { e =>
-      val us = StreamSessionize.tsUs(e.ts)
+    events.sortBy(e => (tsUs(e.ts), e.event_id)).foreach { e =>
+      val us = tsUs(e.ts)
       state match {
         case Some(s) if s.attr != e.attr =>
           closed += ClosedVersion(uid, s.attr, s.since_us, us)

@@ -39,9 +39,6 @@ object StreamSessionize {
 
   def gapUs(gapMinutes: Int): Long = gapMinutes * 60L * 1000000L
 
-  def tsUs(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   def usToTs(us: Long): java.sql.Timestamp = {
     val t = new java.sql.Timestamp(us / 1000L)
     t.setNanos((us % 1000000L).toInt * 1000)

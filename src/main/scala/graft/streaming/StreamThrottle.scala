@@ -45,9 +45,6 @@ object StreamThrottle {
   implicit val keyEnc: Encoder[(Long, Long)] =
     Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
-  def tsUs(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   /** Pure transition: admit from `used` within one (user, window). */
   def step(evs: Seq[ThrottleEvent], used: Long): (Seq[Admitted], Long) = {
     var n = used

@@ -49,9 +49,6 @@ object StreamTokenBucket {
   implicit val outEnc: Encoder[TbAdmitted] = Encoders.product[TbAdmitted]
   implicit val longEnc: Encoder[Long] = Encoders.scalaLong
 
-  def tsUs(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   /** Pure transition: fold one user's batch (time-ordered) from
     * `prior` (a full bucket valued at 0 when absent).
     */

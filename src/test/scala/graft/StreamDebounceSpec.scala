@@ -33,7 +33,7 @@ class StreamDebounceSpec extends SparkSpec {
       ev(2L, GAP_US * 12 / 10), ev(3L, GAP_US * 22 / 10))
     val (out, last) = StreamDebounce.step(evs, StreamDebounce.NO_LAST)
     assert(out.map(_.event_id) === Seq(0L, 2L, 3L))
-    assert(last === StreamDebounce.tsUs(evs(3).ts))
+    assert(last === graft.streaming.tsUs(evs(3).ts))
     // state carries across batches: next event inside the gap drops
     val (out2, _) = StreamDebounce.step(Seq(ev(4L, GAP_US * 25 / 10)),
       last)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.QuantileSketch
-import graft.streaming.StreamQuantile
+import graft.streaming.{Replay, StreamQuantile}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -32,19 +32,12 @@ class StreamQuantileSpec extends SparkSpec {
         }
       }
     }
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     val schema = spark.read.parquet(s"$flat/part00.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$flat/part*.parquet")
-    val sink = "squant_sink_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamQuantile.windowedSketchQuantile(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.table(sink).collect()
+    val streamed = Replay.toMemory(StreamQuantile.windowedSketchQuantile(stream),
+        "append", noDataBatches = true).collect()
       .map(r => ((r.getString(0), r.getString(1)),
         QuantileSketch.fromRow(r.getStruct(2))))
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamSketch
+import graft.streaming.{Replay, StreamSketch}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -45,17 +45,12 @@ class StreamSketchSpec extends SparkSpec {
         }
       }
     }
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     val schema = spark.read.parquet(s"$flat/part00.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$flat/part*.parquet")
-    val sink = "sketch_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamSketch.windowedSketchDistinct(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.table(sink).collect()
+    val streamed = Replay.toMemory(StreamSketch.windowedSketchDistinct(stream), "append",
+        noDataBatches = true).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2).toDouble))
 
     assert(streamed.map(t => (t._1, t._2)).distinct.length == streamed.length,

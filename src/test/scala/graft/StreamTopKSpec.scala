@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{StreamTopK, TopKEvent, TopKOut}
+import graft.streaming.{Replay, StreamTopK, TopKEvent, TopKOut}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -44,21 +44,18 @@ class StreamTopKSpec extends SparkSpec {
     ev.filter(unix_micros(col("ts")) <= mid).coalesce(1)
       .write.parquet(s"$dir/flat")
     val schema = spark.read.parquet(s"$dir/flat").schema
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/flat")
       .withWatermark("ts", "0 seconds")
-    val sink = "topk_spec_sink"
-    val q = StreamTopK.windowedTopK(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
+    val replayed = Replay.toMemory(StreamTopK.windowedTopK(stream), "append",
+        noDataBatches = true, drive = { q =>
       q.processAllAvailable()
       // second batch lands as a new file -> new micro-batch
       ev.filter(unix_micros(col("ts")) > mid).coalesce(1)
         .write.mode("append").parquet(s"$dir/flat")
       q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table(sink).as[TopKOut](
+    })
+    val got = replayed.as[TopKOut](
       org.apache.spark.sql.Encoders.product[TopKOut]).collect().toSet
     assert(got === want)
   }
