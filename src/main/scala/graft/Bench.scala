@@ -20,13 +20,14 @@ object Bench {
 
   val PASSES = 3
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.getOrCreate("graft-bench")
-
-    // noop sink: forces full evaluation of every output column
-    // (count() would let Catalyst prune projection-only work).
-    def once(fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] = {
+  /** One timed run: frame build plus a noop-sink write, which forces
+    * every output column (count() would let Catalyst prune work). Its
+    * `Pins.scope` releases the query's pins after the time is taken;
+    * left to the ContextCleaner, they slowed the next heavy query
+    * (round 6: q168 4.1 -> 10.4 s, q220 4.7 -> 17.6 s, same code). */
+  def once(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] =
+    graft.operators.Pins.scope(spark) {
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -34,20 +35,10 @@ object Bench {
       } catch { case e: Throwable => Left(e) }
     }
 
-    // Attribution hygiene, round 7 (VERDICT r6 item 1): eagerly-
-    // checkpointed frames (localCheckpoint in q220/q168/q287/...) and
-    // stray .persist()s pin storage blocks until the ContextCleaner
-    // notices their references are gone — which in a 295-query x 4
-    // pass loop is far too late, so their memory pressure landed on
-    // whichever heavy query ran next (r6's q168 4.1->10.4 s and q220
-    // 4.7->17.6 s inflation on byte-identical code). Unpersist EVERY
-    // persistent RDD deterministically after each query slot — the
-    // query's sink write has completed, so nothing can still need the
-    // blocks — and keep the periodic untimed System.gc() for codegen
-    // class churn.
-    def releaseBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.getOrCreate("graft-bench")
+
     // Untimed GC between slots: every GC_EVERY slots (codegen-class
     // churn across a wide suite), AND after any slot that ran heavy —
     // an all-heavy subset run (SPARK_GRAFT_BENCH_ONLY) never reaches
@@ -71,15 +62,14 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .sortBy(_._1)
     ordered.zipWithIndex.foreach { case ((_, fn), i) =>
-      val r = once(fn); releaseBlocks()
+      val r = once(spark, sfDir, fn)
       gcTick(i + 1, r.getOrElse(0.0))
     }                                                     // warmup
 
     val samples: Seq[(String, Seq[Either[Throwable, Double]])] =
       (1 to PASSES).map { _ =>
         ordered.zipWithIndex.map { case ((name, fn), i) =>
-          val r = name -> once(fn)
-          releaseBlocks()
+          val r = name -> once(spark, sfDir, fn)
           gcTick(i + 1, r._2.getOrElse(0.0))
           r
         }
@@ -107,7 +97,7 @@ object Bench {
         val ts =
           if (spread <= SPREAD_LIMIT) ts0
           else ts0 ++ (1 to EXTRA_PASSES).flatMap { _ =>
-            val r = once(byName(name)); releaseBlocks(); System.gc()
+            val r = once(spark, sfDir, byName(name)); System.gc()
             // a resample pass that CRASHES must not vanish silently —
             // the main passes already succeeded, so keep the query ok,
             // but put the failure on stderr like the failed collector

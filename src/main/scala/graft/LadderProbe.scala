@@ -14,15 +14,7 @@ object LadderProbe {
     val (sfDir, names) = (args(0), args(1).split(",").toSeq)
     val spark = GraftSession.getOrCreate("graft-ladder")
     val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val r =
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Right((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable => Left(e) }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      val r = Bench.once(spark, sfDir, SparkEntry.queries(name))
       System.gc()
       name -> r
     }

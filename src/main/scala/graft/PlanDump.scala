@@ -4,7 +4,7 @@ package graft
   * <outDir>/<name>.txt — the before/after plan evidence for
   * optimization rounds (plans/r09/..., plans/r10/...). Mostly
   * plan-only, but NOT job-free (ADVICE r09): building a query frame
-  * that contains an eager localCheckpoint(true) runs the checkpointed
+  * that contains an eager `Pins.pin` runs the checkpointed
   * sub-plan for real, and Tables.fanOut's partition probe forces
   * physical planning of the scan — so checkpointed queries dump a
   * post-checkpoint RDD scan in place of the replaced lineage. When the
@@ -27,7 +27,7 @@ object PlanDump {
     val spark = GraftSession.getOrCreate("graft-plandump")
     names.foreach { name =>
       val txt =
-        try {
+        try graft.operators.Pins.scope(spark) {
           val df = SparkEntry.queries(name)(spark, sfDir)
           df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)

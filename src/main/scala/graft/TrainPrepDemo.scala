@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{RegexScrub, SeqPack}
+import graft.operators.{Pins, RegexScrub, SeqPack}
 import graft.queries.TrainPrep
 import org.apache.spark.sql.functions._
 
@@ -57,12 +57,12 @@ object TrainPrepDemo {
     val n1b = deduped.count()
 
     // 2. decontaminate vs the benchmark slice (broadcast shingle set);
-    // persisted — every later stage count re-reads this lineage
+    // pinned — every later stage count re-reads this lineage
     val clean = deduped
       .filter(col("doc_id") >= TrainPrep.DECON_BENCH_DOCS)
       .join(TrainPrep.contaminationHits(deduped).select("doc_id"),
         Seq("doc_id"), "left_anti")
-      .persist()
+      .transform(Pins.pin)
     val n2 = clean.count()
 
     // 3. repetition quality gate (drop boilerplate-heavy docs)
@@ -84,7 +84,7 @@ object TrainPrepDemo {
     val redactions = scrubbed.agg(sumCols.head, sumCols.tail: _*).collect().head
 
     // 5. deterministic per-source mixing
-    val mixed = TrainPrep.mixKeep(scrubbed).persist()
+    val mixed = Pins.pin(TrainPrep.mixKeep(scrubbed))
     val n5 = mixed.count()
 
     // 6. pack into context windows (per-shard prefix sums)
@@ -115,8 +115,6 @@ object TrainPrepDemo {
       s"redactions=${TrainPrep.SCRUB_RULES.map(r => s"${r.name}=${redactions.getAs[Long](r.name)}").mkString(",")} " +
       s"bpe_merges=${merges.map(m => m.left + m.right).mkString("|")} " +
       s"split_leaks=$leaks")
-    mixed.unpersist()
-    clean.unpersist()
     spark.stop()
   }
 }

@@ -96,7 +96,7 @@ object BpeTrainer {
     * if no adjacent pair remains.
     */
   def train(words: DataFrame, nMerges: Int): (Seq[Merge], DataFrame) = {
-    var symbols = toSymbols(words).localCheckpoint(true)
+    var symbols = Pins.pin(toSymbols(words))
     val merges = Seq.newBuilder[Merge]
     var step = 0
     var exhausted = false
@@ -111,9 +111,10 @@ object BpeTrainer {
         val best = top.head
         val (l, r, c) = (best.getString(0), best.getString(1), best.getLong(2))
         merges += Merge(step, l, r, c)
-        symbols = symbols
-          .select(mergePair(col("syms"), l, r).as("syms"), col("wc"))
-          .localCheckpoint(true)
+        val next = Pins.pin(symbols
+          .select(mergePair(col("syms"), l, r).as("syms"), col("wc")))
+        Pins.release(symbols)        // superseded by the materialized next
+        symbols = next
         step += 1
       }
     }

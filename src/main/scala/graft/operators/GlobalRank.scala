@@ -67,7 +67,7 @@ object GlobalRank {
       .repartitionByRange(keys: _*)
       .sortWithinPartitions(keys: _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val counts = ranged.groupBy("__pid").count().as[(Int, Long)].collect()
       .sortBy(_._1)
     val offsets = counts.map(_._1)
@@ -110,7 +110,7 @@ object GlobalRank {
           .sortWithinPartitions(keys: _*)
           .withColumn("__pid", spark_partition_id())) {
         case (d, ((_, v), vc)) => d.withColumn(vc, v.cast("long"))
-      }.localCheckpoint(true)
+      }.transform(Pins.pin)
     val aggs = vcols.map(c => sum(col(c)).as(c))
     val perPart = ranged.groupBy("__pid").agg(aggs.head, aggs.tail: _*)
       .collect().sortBy(_.getInt(0))

@@ -4,7 +4,6 @@ import graft.functions.Astro
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Snapshot statistics over the ASSEMBLED tables (reference:
   * src/nbody6/data/snapshot.py _calc_stats / _calc_annular_stats,
@@ -265,27 +264,19 @@ object SnapshotStats {
     *
     * The tables are a chain (SnapshotAssembler.assemble): `binaries`
     * reads `stars`, and `headers` reads both. So `stars` and then
-    * `binaries` are persisted before the writes, and Spark's
-    * CacheManager swaps each pinned frame into the later plans: every
-    * table is computed once, and the block text is not parsed again
-    * for each write. This is reuse within this one call, not caching
-    * of results across runs: the `finally` unpersists exactly the
-    * entries this call added. A frame the caller already pinned
-    * (storageLevel != NONE) is neither pinned again nor released.
+    * `binaries` are cached, and the CacheManager swaps each into the
+    * later plans: every table is computed once, and the block text is
+    * parsed once. This is reuse within one call, not caching of results
+    * across runs: the scope releases what the call cached.
     */
-  def writePartitioned(assembled: Assembled, path: String): Unit = {
-    val pinned = Seq(assembled.stars, assembled.binaries)
-      .filter(_.storageLevel == StorageLevel.NONE)
-    try {
-      pinned.foreach(_.persist())
+  def writePartitioned(assembled: Assembled, path: String): Unit =
+    graft.operators.Pins.scope(assembled.stars.sparkSession) {
+      graft.operators.Pins.cache(assembled.stars)
+      graft.operators.Pins.cache(assembled.binaries)
       def write(df: DataFrame, table: String): Unit =
         df.write.partitionBy("sim_id").mode("overwrite").parquet(s"$path/$table")
       write(assembled.stars, "stars")
       write(assembled.binaries, "binaries")
       write(assembled.headers, "headers")
-    } finally {
-      // binaries' cached plan reads stars' cache: release it first
-      pinned.reverse.foreach(_.unpersist(blocking = true))
     }
-  }
 }

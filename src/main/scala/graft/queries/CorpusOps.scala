@@ -601,7 +601,7 @@ object CorpusOps extends QueryModule {
     val e = Tables(spark, dir).documents
       .select(col("doc_id"), explode(graft.plans.ShingleHashSet(
         col("text"), DedupOps.SHINGLE_N)).as("w"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     var covered = spark.emptyDataset[Long].toDF("w")
     val picked = Seq.newBuilder[(Int, Long, Long, Long)]
     var exhausted = false
@@ -615,7 +615,7 @@ object CorpusOps extends QueryModule {
           val (bd, bg) = (best.getLong(0), best.getLong(1))
           covered = covered
             .union(e.filter(col("doc_id") === bd).select("w"))
-            .distinct().localCheckpoint(true)
+            .distinct().transform(graft.operators.Pins.pin)
           picked += ((step, bd, bg, covered.count()))
       }
     }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.operators.Pins
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -64,7 +65,7 @@ object DedupOps extends QueryModule {
     // minhash_signature on the stream AND broadcast sides), doubling
     // the query's dominant CPU cost. The pinned table is 4 small rows
     // per doc (id, band, 16-byte hash); text is read once.
-    val bands = bandTable(docs).localCheckpoint(true)
+    val bands = Pins.pin(bandTable(docs))
     val a = bands.as("a")
     val b = bands.as("b")
     a.join(b,
@@ -298,7 +299,7 @@ object DedupOps extends QueryModule {
     * bounded; exact Jaccard verified on the full distinct-shingle sets.
     * Integer-count division is bit-exact across engines, no rounding.
     */
-  def q29NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
+  def q29NgramJaccard(spark: SparkSession, dir: String): DataFrame = Pins.keep(spark) {
     // One fused pass builds the per-doc SORTED shingle hash set; the
     // array table feeds the df rollup (via one explode) and both sides
     // of the verify join. Long keys shuffle ~6x smaller than shingle
@@ -310,7 +311,7 @@ object DedupOps extends QueryModule {
       .select(col("doc_id"),
         sort_array(graft.plans.ShingleHashSet(col("text"), SHINGLE_N))
           .as("shs"))
-      .persist()
+      .transform(Pins.cache)
     val e = arrs.select(col("doc_id"), explode(col("shs")).as("sh"))
     // shingle sets are per-doc distinct, so count(*) == document frequency
     val rareShingles = e.groupBy("sh").agg(count(lit(1)).as("df"))
@@ -338,21 +339,15 @@ object DedupOps extends QueryModule {
           floor((col("n_a") + col("n_b")).cast("double") * lit(tauFrac))
             .cast("long"))))
       .filter(col("n_inter") >= 0L)
-    val out = verified
+    // The verified-pair output is tiny (blocking bounds candidates), so
+    // `keep` pins it and releases the big array table before returning.
+    verified
       .withColumn("jaccard",
         col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
       .filter(col("jaccard") >= JACCARD_MIN)
       .select("doc_a", "doc_b", "n_inter", "jaccard")
       .orderBy("doc_a", "doc_b")
-    // The verified-pair output is tiny (blocking bounds candidates), so
-    // pin IT via an eager localCheckpoint and release the big array
-    // table before returning — a bare persist() here leaked cached
-    // blocks into every later query sharing the session (Bench runs
-    // the whole inventory twice).
-    val pinned = out.localCheckpoint(true)
-    arrs.unpersist()
-    pinned
   }
 
   val q29Sql: String =
@@ -459,7 +454,7 @@ object DedupOps extends QueryModule {
     val cut = math.floor(maxId * INGEST_FRACTION).toLong
     // single signature pass (round 9): both probe sides split from the
     // same pinned band table instead of re-running MinHash per side
-    val bands = bandTable(docs).localCheckpoint(true)
+    val bands = Pins.pin(bandTable(docs))
     val corpusIdx = bands.filter(col("doc_id") < cut)
       .select(col("doc_id").as("old_doc_id"), col("band_idx"), col("band_hash"))
     val newBands = bands.filter(col("doc_id") >= cut)
@@ -501,7 +496,7 @@ object DedupOps extends QueryModule {
     // without the pin each join side re-ran the MinHash pass
     val sigs = docs.select(col("doc_id"),
       graft.plans.MinHashSignature(col("text"), SHINGLE_N, NUM_HASHES).as("sig"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     candidatePairs(docs)
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
@@ -780,27 +775,21 @@ object DedupOps extends QueryModule {
     * measurements). A stage-by-stage decomposition attributed 94% of
     * sf1 wall time to the verify join.
     */
-  def q168PrefixJoin(spark: SparkSession, dir: String): DataFrame = {
-    val (out, cleanup) = q168Plan(spark, dir)
-    val pinned = out.localCheckpoint(true)
-    cleanup()
-    pinned
-  }
+  def q168PrefixJoin(spark: SparkSession, dir: String): DataFrame =
+    Pins.keep(spark)(q168Plan(spark, dir))
 
-  /** The un-checkpointed q168 plan (PlanAuditSpec pins its shape; the
-    * public entry eagerly checkpoints the tiny result and releases the
-    * persisted dictionary/bitmap tables via `cleanup`).
+  /** The q168 plan before its result pin (PlanAuditSpec checks its
+    * shape). It pins and caches its inputs: call it inside a scope.
     */
-  def q168Plan(spark: SparkSession, dir: String): (DataFrame, () => Unit) = {
+  def q168Plan(spark: SparkSession, dir: String): DataFrame = {
     // round 10 (guide §1.2): pin the shingle postings — the dictionary
     // build and the per-doc id-list build each evaluated the explode,
     // running the rolling-hash shingling over the corpus text twice
     // (fanning the scan first was measured slower and reverted — the
     // text exchange outweighs parallel shingling on a small corpus)
-    val (e, releaseE) = graft.operators.Pins.pinWithRelease(
-      Tables(spark, dir).documents
-        .select(col("doc_id"),
-          explode(graft.plans.ShingleHashSet(col("text"), SHINGLE_N)).as("sh")))
+    val e = Pins.pin(Tables(spark, dir).documents
+      .select(col("doc_id"),
+        explode(graft.plans.ShingleHashSet(col("text"), SHINGLE_N)).as("sh")))
     // dense rarest-first dictionary: id order == (df, sh) order.
     // The vocabulary GROWS with the corpus (20k at sf1, 10^8+ at
     // 100 TB), so the global numbering goes through GlobalRank's
@@ -811,7 +800,7 @@ object DedupOps extends QueryModule {
     val dict = graft.operators.GlobalRank
       .withRowNumber(e.groupBy("sh").agg(count(lit(1)).as("df")),
         "rn", col("df"), col("sh"))
-      .select(col("sh"), (col("rn") - 1).as("id")).persist()
+      .select(col("sh"), (col("rn") - 1).as("id")).transform(Pins.cache)
     // per-doc SORTED id list — the prefix source AND (since round 7)
     // the verify representation: SortedIntersectGe merges two sorted
     // lists directly, so no derived bitmap/map structure is built at
@@ -824,7 +813,7 @@ object DedupOps extends QueryModule {
       .agg(sort_array(collect_list("id")).as("ids"))
       .select(col("doc_id"), size(col("ids")).cast("long").as("n_sh"),
         col("ids"))
-      .persist()
+      .transform(Pins.cache)
     // ASYMMETRIC prefixes (PPJoin's index-prefix refinement, round 7):
     // orient each pair by LENGTH — the SHORTER record plays the
     // INDEXED role and only needs the index prefix
@@ -878,7 +867,7 @@ object DedupOps extends QueryModule {
     val thr = ((col("n_a1") + col("n_b1")) * PFX_TAU_NUM +
       (PFX_TAU_NUM + PFX_TAU_DEN) - 1)
       .divide(PFX_TAU_NUM + PFX_TAU_DEN).cast("long")
-    val out = cand
+    cand
       .join(broadcast(side("a")), col("doc_a") === col("doc_a1"))
       .join(broadcast(side("b")), col("doc_b") === col("doc_b1"))
       .withColumn("n_inter",
@@ -888,7 +877,6 @@ object DedupOps extends QueryModule {
         floor(col("n_inter") * lit(1e6) /
           (col("n_a1") + col("n_b1") - col("n_inter")) + lit(0.5))
           .cast("long").as("jac_micro"))
-    (out, () => { docs.unpersist(); dict.unpersist(); releaseE(); () })
   }
 
   val q168Sql: String =
@@ -1058,8 +1046,8 @@ object DedupOps extends QueryModule {
     val docs = Tables(spark, dir).documents
     val exact = q168PrefixJoin(spark, dir)
       .select(col("doc_a"), col("doc_b"), col("jac_micro"))
-      .localCheckpoint(true)
-    val cand = candidatePairs(docs).localCheckpoint(true)
+      .transform(Pins.pin)
+    val cand = Pins.pin(candidatePairs(docs))
     val candJac = cand.join(exact, Seq("doc_a", "doc_b"))
     val truthCols = EVAL_TAUS.map(t =>
       sum(when(col("jac_micro") >= t, 1L).otherwise(0L)).as(s"true_$t"))
@@ -1134,7 +1122,7 @@ object DedupOps extends QueryModule {
     */
   def q225ClusterDensity(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val pairs = candidatePairs(docs).localCheckpoint(true)
+    val pairs = Pins.pin(candidatePairs(docs))
     val comp = graft.operators.ConnectedComponents
       .components(pairs, "doc_a", "doc_b")
     val nodes = comp.groupBy("comp").agg(count(lit(1)).as("n_nodes"))

@@ -820,7 +820,7 @@ object EmbeddingOps extends QueryModule {
       .filter(col("rn") <= MMR_CAND)
       .select(col("query_id"), col("vec_id"), col("rel"),
         col("embedding"), col("rn"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     var selected = cand.filter(col("rn") === 1)
       .select(col("query_id"), col("vec_id"), lit(1).as("mmr_rank"),
         col("rel"), lit(0.0d).as("maxsim"), col("embedding"))

@@ -484,7 +484,7 @@ object EventAnalytics extends QueryModule {
       .select(col("o_orderpriority"),
         datediff(col("l_shipdate"), col("o_orderdate"))
           .cast("double").as("lat_days"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     graft.operators.DistributedQuantile
       .describe(lat, Seq("o_orderpriority"), "lat_days",
         Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99))
@@ -1301,7 +1301,7 @@ object EventAnalytics extends QueryModule {
       .select(col("event_id").as("pid"), col("value").as("px"),
         expr("CAST((unix_micros(ts) div 3600000000) % 24 AS DOUBLE)")
           .as("py"), lit(0.0).as("pz"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     // density guard (see DBSCAN_MAX_MEAN_CELL_POP): one tiny agg over
     // the checkpointed sample — the grid histogram SpatialNeighbors
     // would build anyway — refuses the quadratic regime fail-fast
@@ -1322,14 +1322,14 @@ object EventAnalytics extends QueryModule {
         col("py").as("by"), col("pz").as("bz")), "bx", "by", "bz",
       DBSCAN_EPS, dims = 2)
       .select("a", "b")
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     // pin the (tiny) core set: it feeds both sides of the core-edge
     // join AND the label attach — unpinned, each evaluation re-ran the
     // degree rollup over the 688k-row neighbor table (round 10)
     val core = nbr.groupBy("a").agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= DBSCAN_MIN_PTS)
       .select(col("a").as("pid"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     // Round 10 (guide §2.3: shuffle a lightweight proxy, not the full
     // pair set): EXACT cell contraction before the CC. Two core points
     // in the same square cell of side eps*0.707 are at most
@@ -1350,7 +1350,7 @@ object EventAnalytics extends QueryModule {
     val superT = coreC.groupBy("cx", "cy").agg(min("pid").as("super"))
     val coreSuper = coreC.join(superT, Seq("cx", "cy"))
       .select(col("pid"), col("super"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val superEdges = nbr
       .join(coreSuper.select(col("pid").as("a"), col("super").as("sa")), "a")
       .join(coreSuper.select(col("pid").as("b"), col("super").as("sb")), "b")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.Pins
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,7 +42,7 @@ object GraphOps extends QueryModule {
     // within-order basket explode), thinned by min support;
     // checkpointed — it feeds degrees, orientation, and the
     // closing-edge probe
-    triangleCounts(coPurchaseEdges(spark, dir).localCheckpoint(true))
+    triangleCounts(Pins.pin(coPurchaseEdges(spark, dir)))
 
   /** Per-node triangle counts over a PINNED edge list — shared by q117
     * and q316 so q316 builds the co-purchase edges once, not twice
@@ -61,7 +62,7 @@ object GraphOps extends QueryModule {
         when(col("ku") < col("kv"), col("u")).otherwise(col("v")).as("src"),
         when(col("ku") < col("kv"), col("v")).otherwise(col("u")).as("dst"),
         greatest(col("ku"), col("kv")).as("kd"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val wedges = oriented.select(col("src"), col("dst").as("n1"), col("kd").as("k1"))
       .join(oriented.select(col("src"), col("dst").as("n2"), col("kd").as("k2")), Seq("src"))
       .filter(col("k1") < col("k2"))
@@ -143,11 +144,11 @@ object GraphOps extends QueryModule {
     * sums.
     */
   def q206DegreeProfile(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coPurchaseEdges(spark, dir).localCheckpoint(true)
+    val edges = Pins.pin(coPurchaseEdges(spark, dir))
     val deg = edges.select(col("u").as("n"))
       .union(edges.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val directed = edges.select(col("u"), col("v"))
       .union(edges.select(col("v").as("u"), col("u").as("v")))
     val endpoints = directed
@@ -219,8 +220,7 @@ object GraphOps extends QueryModule {
     * exactly). Emits each surviving node with its in-core degree.
     */
   def q223KCore(spark: SparkSession, dir: String): DataFrame = {
-    var (edges, releaseEdges) = graft.operators.Pins.pinWithRelease(
-      coPurchaseEdges(spark, dir))
+    var edges = Pins.pin(coPurchaseEdges(spark, dir))
     var n = edges.count()
     var rounds = 0
     var converged = false
@@ -230,14 +230,14 @@ object GraphOps extends QueryModule {
         .groupBy("n").agg(count(lit(1)).as("d"))
         .filter(col("d") >= KCORE_K)
         .select("n")
-      val (pruned, releasePruned) = graft.operators.Pins.pinWithRelease(edges
+      val pruned = Pins.pin(edges
         .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
         .select("u", "v"))
       val m = pruned.count()
       converged = m == n
-      releaseEdges()                 // superseded round's pin (guide §5)
-      edges = pruned; releaseEdges = releasePruned; n = m; rounds += 1
+      Pins.release(edges)            // superseded round's pin (guide §5)
+      edges = pruned; n = m; rounds += 1
     }
     edges.select(col("u").as("p_partkey"))
       .union(edges.select(col("v").as("p_partkey")))
@@ -305,11 +305,11 @@ object GraphOps extends QueryModule {
     val edges = graft.operators.ConnectedComponents
       .symmetric(coPurchaseEdges(spark, dir), "u", "v")
       .select(col("a").as("u"), col("b").as("v"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     var visited = edges.select(col("u").as("n")).distinct()
       .filter(col("n") % BFS_SEED_MOD === 0)
       .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     var frontier = visited.select("n")
     var hop = 1
     while (hop <= BFS_MAX_HOPS) {
@@ -317,7 +317,7 @@ object GraphOps extends QueryModule {
         .select(col("v").as("n")).distinct()
         .join(visited.select("n"), Seq("n"), "left_anti")
         .withColumn("dist", lit(hop.toLong))
-        .localCheckpoint(true)
+        .transform(Pins.pin)
       // visited stays a LAZY union of the pinned hop frames (round 10,
       // guide §5): re-checkpointing the union per hop copied every
       // prior hop's rows again — one extra materialization job per hop
@@ -378,7 +378,7 @@ object GraphOps extends QueryModule {
     * in the gate.
     */
   def q275LinkPredict(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = coPurchaseEdges(spark, dir).localCheckpoint(true)
+    val e0 = Pins.pin(coPurchaseEdges(spark, dir))
     val edges = e0.select(col("u"), col("v"))
       .union(e0.select(col("v").as("u"), col("u").as("v")))
     val deg = edges.groupBy(col("u").as("n"))
@@ -446,22 +446,20 @@ object GraphOps extends QueryModule {
     val edges = graft.operators.ConnectedComponents
       .symmetric(coPurchaseEdges(spark, dir), "u", "v")
       .select(col("a").as("u"), col("b").as("v"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     var labels = edges.select(col("u").as("n")).distinct()
       .withColumn("lbl", col("n"))
-    var releaseLabels: () => Unit = () => ()
     (1 to LPA_ROUNDS).foreach { _ =>
       val gathered = edges
         .join(labels.withColumnRenamed("n", "v"), "v")  // v's label -> u
         .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("c"))
       val w = Window.partitionBy("u")
         .orderBy(col("c").desc, col("lbl").asc)
-      val (next, releaseNext) = graft.operators.Pins.pinWithRelease(
-        gathered.withColumn("_rk", row_number().over(w))
-          .filter(col("_rk") === 1)
-          .select(col("u").as("n"), col("lbl")))
-      releaseLabels()                // superseded round's pin (guide §5)
-      labels = next; releaseLabels = releaseNext
+      val next = Pins.pin(gathered.withColumn("_rk", row_number().over(w))
+        .filter(col("_rk") === 1)
+        .select(col("u").as("n"), col("lbl")))
+      Pins.release(labels)           // superseded round's pin (guide §5)
+      labels = next
     }
     labels.select(col("n").as("p_partkey"), col("lbl").as("community"))
   }
@@ -508,7 +506,7 @@ object GraphOps extends QueryModule {
     // round 10: ONE pinned edge list feeds both the triangle corners
     // and the degree table (was: q117 built + pinned its own edges and
     // this query built the whole co-purchase rollup a second time)
-    val edges = coPurchaseEdges(spark, dir).localCheckpoint(true)
+    val edges = Pins.pin(coPurchaseEdges(spark, dir))
     val tri = triangleCounts(edges)
     val deg = edges.select(col("u").as("n"))
       .union(edges.select(col("v").as("n")))
@@ -577,11 +575,11 @@ object GraphOps extends QueryModule {
     val edges = graft.operators.ConnectedComponents
       .symmetric(coPurchaseEdges(spark, dir), "u", "v")
       .select(col("a").as("u"), col("b").as("v"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     var visited = edges.select(col("u").as("n")).distinct()
       .filter(col("n") % BFS_SEED_MOD === 0)
       .select(col("n").as("seed"), col("n"), lit(0).as("dist"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     var frontier = visited.select("seed", "n")
     var hop = 1
     while (hop <= BFS_MAX_HOPS) {
@@ -590,7 +588,7 @@ object GraphOps extends QueryModule {
         .select(col("seed"), col("v").as("n")).distinct()
         .join(visited.select("seed", "n"), Seq("seed", "n"), "left_anti")
         .withColumn("dist", lit(hop))
-        .localCheckpoint(true)
+        .transform(Pins.pin)
       // lazy union of pinned hop frames — see q271 (round 10)
       visited = visited.union(next)
       frontier = next.select("seed", "n")
@@ -657,7 +655,7 @@ object GraphOps extends QueryModule {
     // round 10: pin the pair rollup, then symmetrize in ONE pass —
     // union(pairs, pairs.swapped) evaluated the basket build twice
     // per referencing job (deg checkpoint AND edgesD checkpoint)
-    val pairs = coPurchaseEdges(spark, dir).localCheckpoint(true)
+    val pairs = Pins.pin(coPurchaseEdges(spark, dir))
     val edges = graft.operators.ConnectedComponents
       .symmetric(pairs, "u", "v")
       .select(col("a").as("src"), col("b").as("dst"))
@@ -665,9 +663,9 @@ object GraphOps extends QueryModule {
     // from it, and without the pin each would re-run the co-purchase
     // self-join (measured: 15.0 s -> the q103 price at sf0.1)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val edgesD = edges.join(deg, "src")
-      .repartition(col("src")).localCheckpoint(true)
+      .repartition(col("src")).transform(Pins.pin)
     val seeds = deg.select(col("src").as("node"))
       .filter(col("node") % 50 === PPR_SEED_MOD)
     var ranks = deg.select(col("src").as("node"),
@@ -733,12 +731,12 @@ object GraphOps extends QueryModule {
     // round 10: pin + one-pass symmetrize (was: 4 evaluations of the
     // basket rollup — dirEdges union'd it twice, deg and ep each
     // evaluated dirEdges); deg pins too, it feeds two ep joins
-    val pairs = coPurchaseEdges(spark, dir).localCheckpoint(true)
+    val pairs = Pins.pin(coPurchaseEdges(spark, dir))
     val dirEdges = graft.operators.ConnectedComponents
       .symmetric(pairs, "u", "v")
       .select(col("a").as("u"), col("b").as("v"))
     val deg = dirEdges.groupBy("u").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val ep = dirEdges
       .join(deg.select(col("u"), col("d").as("du")), "u")
       .join(deg.select(col("u").as("v"), col("d").as("dv")), "v")
@@ -819,13 +817,13 @@ object GraphOps extends QueryModule {
     */
   def q415AnfReach(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.DistinctSketch
-    val edges = coPurchaseEdges(spark, dir).localCheckpoint(true)
+    val edges = Pins.pin(coPurchaseEdges(spark, dir))
     val nodes = edges.select(col("u").as("node"))
       .union(edges.select(col("v").as("node"))).distinct()
     val und = edges.select(col("u").as("node"), col("v").as("nb"))
       .union(edges.select(col("v").as("node"), col("u").as("nb")))
       .union(nodes.select(col("node"), col("node").as("nb")))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     // ball sketches, one union round per hop over the whole graph.
     // Round 10: pinning each hop's ball table (hop h's plan nests hop
     // h-1's, so the union re-evaluates earlier hops) was tried and
@@ -845,7 +843,7 @@ object GraphOps extends QueryModule {
       balls += ball.withColumn("hop", lit(h))
     }
     val probes = nodes.orderBy("node").limit(ANF_PROBE_MAX)
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val est = balls.reduce(_ unionByName _)
       .join(broadcast(probes), "node")
       .select(col("node"), col("hop"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{DistributedQuantile, ZOrderLayout}
+import graft.operators.{DistributedQuantile, Pins, ZOrderLayout}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -277,7 +277,7 @@ object LayoutOps extends QueryModule {
         expr(s"$stackExpr as (col_name, val)"))
       .groupBy("col_name", "l_orderkey", "l_linenumber", "val")
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val runs = compressed
       .withColumn("brk",
         when(lag("val", 1).over(w).isNull ||

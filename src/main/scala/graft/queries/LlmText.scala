@@ -106,7 +106,7 @@ object LlmText extends QueryModule {
   def q411MacroF1(spark: SparkSession, dir: String): DataFrame = {
     val conf = q32LangId(spark, dir)
       .groupBy("actual_lang", "pred_lang").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val act = conf.groupBy(col("actual_lang").as("cls"))
       .agg(sum("n").as("n_act"))
     val pred = conf.groupBy(col("pred_lang").as("cls"))
@@ -126,7 +126,7 @@ object LlmText extends QueryModule {
       .withColumn("f1_micro",
         micro(lit(2L) * col("prec_micro") * col("rec_micro"),
           (col("prec_micro") + col("rec_micro")) * lit(1000000L)))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val macroRow = perClass.filter(col("n_act") > 0)
       .agg(sum("tp").as("tp"), sum("n_pred").as("n_pred"),
         sum("n_act").as("n_act"),
@@ -1262,7 +1262,7 @@ object LlmText extends QueryModule {
     val counted = Tables(spark, dir).documents
       .select(explode(bigrams).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val totals = counted.agg(sum("n").as("total"), count(lit(1)).as("vocab"))
     val maxCut = COVERAGE_CUTS.max.toInt
     val top = counted.orderBy(col("n").desc, col("tok").asc).limit(maxCut)

@@ -362,7 +362,7 @@ object OpsAnalytics extends QueryModule {
     val ordersHit = t.orders.join(broadcast(purge),
         col("o_custkey") === col("k"))
       .select(col("o_orderkey"), col("k"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val ordRow = ordersHit
       .agg(count(lit(1)).as("n_rows"), countDistinct(col("k")).as("n_keys"))
       .select(lit("orders").as("table_name"), col("n_rows"), col("n_keys"))

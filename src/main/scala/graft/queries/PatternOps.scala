@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.DistributedQuantile
+import graft.operators.{DistributedQuantile, Pins}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,7 +87,7 @@ object PatternOps extends QueryModule {
     // of ITS scans — measured 18.8 s at sf0.1 without the pins, 2 s with
     val med = DistributedQuantile.quantiles(
       ev, Seq("event_type"), "value", Seq("med" -> 0.5))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     // round 10: pinning dev was tried and REVERTED — measured flat at
     // sf0.1 (4.3 s isolated both ways: the re-evaluated scan+broadcast
     // join is as cheap as the cache read), and at scale materializing
@@ -99,7 +99,7 @@ object PatternOps extends QueryModule {
         abs(col("value") - col("med")).as("adev"))
     val mad = DistributedQuantile.quantiles(
       dev, Seq("event_type"), "adev", Seq("mad" -> 0.5))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     dev.join(broadcast(mad), "event_type")
       .join(broadcast(med), "event_type")
       .groupBy("event_type")

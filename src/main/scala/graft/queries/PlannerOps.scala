@@ -214,7 +214,7 @@ object PlannerOps extends QueryModule {
       date_format(col("o_orderdate"), "yyyy-MM").as("month"),
       (conv(substring(md5(col("o_orderkey").cast("string")), 1, 6), 16, 10)
         .cast("long") % 100 < INVALIDATE_PCT).as("changed"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val affected = orders.filter(col("changed"))
       .groupBy("month").agg(count(lit(1)).as("n_changed_orders"))
     val monthTotals = orders.groupBy("month")

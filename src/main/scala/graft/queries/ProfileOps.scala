@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.DistributedQuantile
+import graft.operators.{DistributedQuantile, Pins}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -56,7 +56,7 @@ object ProfileOps extends QueryModule {
         explode(graft.plans.ShingleHashSet(col("text"), DedupOps.SHINGLE_N))
           .as("sh"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val sizes = srcSh.groupBy("source").agg(count(lit(1)).as("n_sh"))
     val inter = srcSh.as("a")
       .join(srcSh.as("b"),
@@ -113,7 +113,7 @@ object ProfileOps extends QueryModule {
             pow(col("n").cast("double"), 1.0 / 3.0)).cast("long"))
           .as("width_c"),
         col("v_min"), col("n"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     o.crossJoin(broadcast(stats))
       .groupBy((((col("v_c") - col("v_min")) / col("width_c"))
         .cast("long")).as("bin"))

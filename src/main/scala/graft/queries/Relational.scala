@@ -473,17 +473,17 @@ object Relational extends QueryModule {
       .groupBy(col("p.u").as("part_a"), col("p.v").as("part_b"))
       .agg(count(lit(1)).as("n_both"))
       .filter(col("n_both") >= Q93_MIN_SUPPORT)
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val edges = graft.operators.ConnectedComponents
       .symmetric(pairs, "part_a", "part_b")
       .select(col("a").as("src"), col("b").as("dst"))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     // hash-partition on src BEFORE the eager checkpoint: LogicalRDD
     // keeps the partitioning, so every iteration's ranks join reuses
     // it and only the |nodes|-sized ranks side shuffles per round
     val edgesD = edges.join(deg, "src")
-      .repartition(col("src")).localCheckpoint(true)
+      .repartition(col("src")).transform(graft.operators.Pins.pin)
     var ranks = deg.select(col("src").as("node"),
       lit(1000000000L).as("rank"))
     for (_ <- 1 to PAGERANK_ITERS) {
@@ -547,7 +547,7 @@ object Relational extends QueryModule {
         .select(col("l_orderkey"), col("l_partkey")), col("l_orderkey"))
       .groupBy("l_orderkey")
       .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val nOrders = broadcast(
       t.orders.agg(count(lit(1)).as("n_orders")))
     val supp = baskets.select(explode(col("parts")).as("l_partkey"))
@@ -813,14 +813,14 @@ object Relational extends QueryModule {
         .select(col("l_orderkey"), col("l_partkey")), col("l_orderkey"))
       .groupBy("l_orderkey")
       .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val f2 = baskets
       .select(graft.operators.Baskets.pairs(col("parts")).as("p"))
       .groupBy(col("p.u").as("x"), col("p.v").as("y"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") >= Q93_MIN_SUPPORT)
       .select("x", "y")
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     baskets
       .select(graft.operators.Baskets.triples(col("parts")).as("t"))
       .join(f2.as("pab"),
@@ -914,7 +914,7 @@ object Relational extends QueryModule {
   def q239AssocSignificance(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
     val li = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val nOrders = broadcast(t.orders.agg(count(lit(1)).as("n")))
     val supp = li.groupBy(col("l_partkey")).agg(count(lit(1)).as("supp"))
     li.as("x").join(li.as("y"),

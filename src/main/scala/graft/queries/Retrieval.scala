@@ -55,7 +55,7 @@ object Retrieval extends QueryModule {
     val perDoc = Tables(spark, dir).documents
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(Seq(col("doc_id"), size(col("tk")).as("dl")) ++ tfCols: _*)
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val statCols: Seq[Column] =
       Seq(count(lit(1)).as("n_docs"), sum(col("dl")).cast("long").as("total_len")) ++
         BM25_TERMS.indices.map(i =>
@@ -148,7 +148,7 @@ object Retrieval extends QueryModule {
       .select(col("doc_id"), col("g"), col("df"),
         (col("tf") * floor(log(col("n_docs").cast("double") / col("df")) * lit(1e6) + lit(0.5))
           .cast("long")).as("w"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val nrm = w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("n2"))
     val rare = w.filter(col("df") <= TFIDF_DF_MAX).select(col("doc_id"), col("g"))
     val cand = rare.as("a").join(rare.as("b"),

@@ -336,7 +336,7 @@ object SessionOps extends QueryModule {
       q.processAllAvailable()
       // one row read once, reused by both flush batches
       val baseRow = spark.read.parquet(s"$dir/events.parquet").limit(1)
-        .localCheckpoint(true)
+        .transform(graft.operators.Pins.pin)
       writeFlush(baseRow, 2035, "zz_flush1")
       q.processAllAvailable()
       writeFlush(baseRow, 2036, "zz_flush2")

@@ -434,7 +434,7 @@ object StatsOps extends QueryModule {
         floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("v_c"))
       .filter(col("day") >= MK_DAY_LO && col("day") < MK_DAY_HI)
       .groupBy("prio", "day").agg(sum("v_c").as("rev_c"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val a = daily.select(col("prio"), col("day").as("d1"), col("rev_c").as("v1"))
     val b = daily.select(col("prio"), col("day").as("d2"), col("rev_c").as("v2"))
     a.join(b, Seq("prio")).filter(col("d1") < col("d2"))
@@ -1043,7 +1043,7 @@ object StatsOps extends QueryModule {
     // the 1-row aggregate IS the scan's output; pin it eagerly so the
     // four report branches (replicates, point, CI lo/hi) fold 34 rows
     // instead of each re-deriving the aggregate and re-scanning orders
-    val m = proj.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+    val m = proj.agg(aggs.head, aggs.tail: _*).transform(graft.operators.Pins.pin)
     val entries = (0 until BOOT_B).map { b =>
       struct(lit(b.toLong).as("b"), col(s"sw$b").as("n_eff"),
         floor(col(s"swx$b").cast("double") * lit(1e6) /
@@ -1267,7 +1267,7 @@ object StatsOps extends QueryModule {
         unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(byUser))
       .filter(col("gap_us").isNotNull)
       .select("event_type", "gap_us")
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     graft.operators.DistributedQuantile.quantilesWithSum(
         gaps, Seq("event_type"), "gap_us", Seq("p50" -> 0.5, "p90" -> 0.9))
       .select(col("event_type"), col("n").as("n_gaps"),
@@ -4179,7 +4179,7 @@ object StatsOps extends QueryModule {
         .cast("long").as("aq"),
       floor(d(col("s")) / d(col("n")) + lit(0.5)).cast("long").as("xbu"),
       floor(lit(1e12) / d(col("n")) + lit(0.5)).cast("long").as("hq"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val tot = terms.agg(count(lit(1)).as("m"), sum("n").as("nn"),
       sum("ss").as("sstot"), sum("aq").as("a_unit"),
       sum("hq").as("hp12"), sum("xbu").as("sxb"),

@@ -426,7 +426,7 @@ object TpchShapes extends QueryModule {
       .join(ordersIn, col("l_orderkey") === col("o_orderkey"))
       .groupBy("l_suppkey")
       .agg(sum("rev").as("total_rev"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val mx = rev.agg(max("total_rev").as("max_rev"))
     rev.crossJoin(broadcast(mx))
       .filter(col("total_rev") === col("max_rev"))
@@ -517,7 +517,7 @@ object TpchShapes extends QueryModule {
           + lit(0.5)).cast("long").as("rev"))
       .groupBy("l_partkey")
       .agg(sum("rev").as("part_rev"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     val tot = perPart.agg(sum("part_rev").as("total_rev"))
     perPart.crossJoin(broadcast(tot))
       .filter(col("part_rev") * lit(1000000L) >

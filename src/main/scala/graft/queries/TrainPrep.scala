@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions.tokens
-import graft.operators.{BpeTrainer, DistributedQuantile, RegexScrub, SeqPack}
+import graft.operators.{BpeTrainer, DistributedQuantile, Pins, RegexScrub, SeqPack}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -552,7 +552,7 @@ object TrainPrep extends QueryModule {
     // over the corpus text
     val docs = Tables(spark, dir).documents
       .select(col("source"), size(tokens(col("text"))).cast("double").as("n_tok"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     DistributedQuantile.describe(docs, Seq("source"), "n_tok",
         Seq("p10" -> 0.1, "p50" -> 0.5, "p90" -> 0.9))
       .select(col("source"), col("n"), col("mean"),
@@ -867,12 +867,12 @@ object TrainPrep extends QueryModule {
     // the documents scan + tokenize would run five times
     val toks = Tables(spark, dir).documents
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val bigrams = toks
       .select(col("doc_id"), (col("pos") + 1).as("pos2"), col("tok").as("w1"))
       .join(toks.select(col("doc_id"), col("pos").as("pos2"),
         col("tok").as("w2")), Seq("doc_id", "pos2"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val bc = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("nb"))
     val uni = toks.groupBy("tok").agg(count(lit(1)).as("n1"))
     bigrams
@@ -1416,7 +1416,7 @@ object TrainPrep extends QueryModule {
     val counts = Tables(spark, dir).documents
       .select(col("source"), explode(tokens(col("text"))).as("t"))
       .groupBy("source", "t").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .transform(Pins.pin)
     val corpus = counts.groupBy("t").agg(sum("c").as("cg"))
     val totals = counts.groupBy("source").agg(sum("c").as("ns"))
     val ng = counts.agg(sum("c").as("ng"))

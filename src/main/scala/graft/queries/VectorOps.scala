@@ -215,7 +215,7 @@ object VectorOps extends QueryModule {
         first(col("embedding")).as("embedding"))
       .select(col("vec_id"), (-col("best.neg_cent")).cast("long").as("cell"),
         col("embedding"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Pins.pin)
     semDedupResolve(assigned, emb)
   }
 
@@ -299,7 +299,7 @@ object VectorOps extends QueryModule {
       s"fixed-cell control: $n vectors over $SEM_CELLS cells exceeds " +
         s"the $SEM_FIXED_MAX_POP per-cell capacity bound — use the " +
         "sized quantizer (q63SemanticDedup) on growing corpora")
-    val assigned = assignCells(spark, dir).localCheckpoint(true)
+    val assigned = graft.operators.Pins.pin(assignCells(spark, dir))
     semDedupResolve(assigned, emb)
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.BpeTrainer
+import graft.operators.{BpeTrainer, Pins}
 import graft.queries.TrainPrep
 import org.apache.spark.sql.functions._
 
@@ -126,6 +126,19 @@ class BpeTrainerSpec extends SparkSpec {
     assert(merges.forall(_.count > 0))
     val after = finalSyms.agg(sum(size(col("syms")))).head.getLong(0)
     assert(after < before, "merges must shrink total symbol count")
+  }
+
+  test("train leaves only its final symbol table pinned") {
+    import spark.implicits._
+    val words = Seq("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)
+      .toDF("word", "wc")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (merges, finalSyms) = BpeTrainer.train(words, 4)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(merges.size == 4)
+    assert(added.size == 1, s"train left ${added.size} symbol tables pinned")
+    assert(finalSyms.count() == 4)
+    Pins.release(finalSyms)
   }
 
   test("q64/q65 have oracle entries and return expected shapes") {

@@ -370,15 +370,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q168: prefix join verifies via broadcast id lists, no posting join") {
-    val (df, cleanup) = graft.queries.DedupOps.q168Plan(spark, sfDir)
-    try {
-      val p = executedPlan(df)
+    graft.operators.Pins.scope(spark) {
+      val p = executedPlan(graft.queries.DedupOps.q168Plan(spark, sfDir))
       assert(p.contains("BroadcastHashJoin"),
         "expected broadcast candidate/bitmap joins")
       assert(!p.contains("SortMergeJoin"),
         "verification must not shuffle-join posting lists")
       assert(!p.contains("CartesianProduct"))
-    } finally cleanup()
+    }
   }
 
   test("q158/q159: orders/lineitem aggregate map-side before any join") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{AnomEvent, AnomOut, StreamAnomaly}
+import graft.streaming.{AnomEvent, AnomOut, Replay, StreamAnomaly}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -61,12 +61,8 @@ class StreamAnomalySpec extends SparkSpec {
     val schema = spark.read.parquet(flat).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(flat)
-    val sink = "anom_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamAnomaly.detect(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.table(sink).collect()
+    val streamed = Replay.toMemory(StreamAnomaly.detect(stream), "append",
+      noDataBatches = true).collect()
       .map(r => AnomOut(r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSet
     val expected = expectedAnomalies()

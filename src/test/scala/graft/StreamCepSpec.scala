@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{CepEvent, CepMatch, StreamCep}
+import graft.streaming.{CepEvent, CepMatch, Replay, StreamCep}
 import graft.queries.PlannerOps
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -88,16 +88,14 @@ class StreamCepSpec extends SparkSpec {
     val schema = spark.read.parquet(s"$dir/flat").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/flat")
-    val sink = "cep_spec_sink"
-    val q = StreamCep.matchPairs(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
+    val replayed = Replay.toMemory(StreamCep.matchPairs(stream), "append",
+        noDataBatches = true, drive = { q =>
       q.processAllAvailable()
       t.events.filter(unix_micros(col("ts")) > mid).coalesce(1)
         .write.mode("append").parquet(s"$dir/flat")
       q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table(sink).as[CepMatch](
+    })
+    val got = replayed.as[CepMatch](
       org.apache.spark.sql.Encoders.product[CepMatch]).collect().toSet
     assert(got === want)
   }

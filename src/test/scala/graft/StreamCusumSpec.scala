@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{CusumEvent, CusumOut, StreamCusum}
+import graft.streaming.{CusumEvent, CusumOut, Replay, StreamCusum}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -70,14 +70,8 @@ class StreamCusumSpec extends SparkSpec {
     val schema = spark.read.parquet(flat).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(flat)
-    val sink = "cusum_sink_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamCusum.monitor(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.table(sink).collect()
+    val streamed = Replay.toMemory(StreamCusum.monitor(stream), "append",
+      noDataBatches = true).collect()
       .map(r => CusumOut(r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
       .toSet

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{DebEvent, DebKept, StreamDebounce}
+import graft.streaming.{DebEvent, DebKept, Replay, StreamDebounce}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -63,14 +63,8 @@ class StreamDebounceSpec extends SparkSpec {
     val schema = spark.read.parquet(flat).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(flat)
-    val sink = "deb_sink_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamDebounce.debounce(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.table(sink).collect()
+    val streamed = Replay.toMemory(StreamDebounce.debounce(stream), "append",
+      noDataBatches = true).collect()
       .map(r => DebKept(r.getLong(0), r.getString(1), r.getLong(2)))
     assert(streamed.length === streamed.toSet.size, "no duplicates")
     assert(streamed.toSet === expectedKept())

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{DedupOut, StreamDedup}
+import graft.streaming.{DedupOut, Replay, StreamDedup}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -43,12 +43,8 @@ class StreamDedupSpec extends SparkSpec {
     val schema = spark.read.parquet(flat).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(flat)
-    val sink = "dedup_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamDedup.dedup(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.table(sink).collect()
+    val streamed = Replay.toMemory(StreamDedup.dedup(stream), "append",
+      noDataBatches = true).collect()
       .map(r => DedupOut(r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getDouble(4)))
 
@@ -85,12 +81,8 @@ class StreamDedupSpec extends SparkSpec {
     val schema = spark.read.parquet(flat).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(flat)
-    val sink = "scd2_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamScd2.closedVersions(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.table(sink).collect()
+    val streamed = Replay.toMemory(StreamScd2.closedVersions(stream), "append",
+      noDataBatches = true).collect()
       .map(r => ClosedVersion(r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
     // batch truth over the whole log: the closed rows of the q110 history

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{Conversion, StreamFunnel}
+import graft.streaming.{Conversion, Replay, StreamFunnel}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -57,12 +57,8 @@ class StreamFunnelSpec extends SparkSpec {
     val schema = spark.read.parquet(flat).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(flat)
-    val sink = "funnel_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamFunnel.attribute(stream, windowUs)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.table(sink).collect()
+    val streamed = Replay.toMemory(StreamFunnel.attribute(stream, windowUs), "append",
+      noDataBatches = true).collect()
       .map(r => Conversion(r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
     // batches split by time preserve order, so cross-batch attribution

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{RetSeen, RetState, StreamRetention}
+import graft.streaming.{Replay, RetSeen, RetState, StreamRetention}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -45,20 +45,18 @@ class StreamRetentionSpec extends SparkSpec {
     val schema = spark.read.parquet(s"$dir/flat").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/flat")
-    val sink = "retention_spec_sink"
-    val q = StreamRetention.firstSeen(stream).toDF()
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
+    val replayed = Replay.toMemory(StreamRetention.firstSeen(stream), "append",
+        noDataBatches = true, drive = { q =>
       q.processAllAvailable()
       ev.filter(unix_micros(col("ts")) > mid).coalesce(1)
         .write.mode("append").parquet(s"$dir/flat")
       q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table(sink).as[RetSeen](
+    })
+    val got = replayed.as[RetSeen](
       org.apache.spark.sql.Encoders.product[RetSeen]).collect().toSet
     assert(got === want)
     // append-only: no (user, day) attributed twice
-    val gotRows = spark.table(sink).collect()
+    val gotRows = replayed.collect()
     assert(gotRows.length === got.size)
   }
 }

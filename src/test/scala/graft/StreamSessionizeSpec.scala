@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{SessEvent, SessionOut, StreamSessionize}
+import graft.streaming.{Replay, SessEvent, SessionOut, StreamSessionize}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -71,12 +71,8 @@ class StreamSessionizeSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1")
       .parquet(flat)
       .withWatermark("ts", "0 seconds")
-    val sink = "sess_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamSessionize.sessionize(stream, GAP_MIN)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.table(sink).collect()
+    val streamed = Replay.toMemory(StreamSessionize.sessionize(stream, GAP_MIN), "append",
+      noDataBatches = true).collect()
       .map(r => SessionOut(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
       .toSet
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{Admitted, StreamThrottle, ThrottleEvent}
+import graft.streaming.{Admitted, Replay, StreamThrottle, ThrottleEvent}
 import graft.queries.PlannerOps
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -47,16 +47,14 @@ class StreamThrottleSpec extends SparkSpec {
     val schema = spark.read.parquet(s"$dir/flat").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/flat")
-    val sink = "throttle_spec_sink"
-    val q = StreamThrottle.throttle(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
+    val replayed = Replay.toMemory(StreamThrottle.throttle(stream), "append",
+        noDataBatches = true, drive = { q =>
       q.processAllAvailable()
       ev.filter(unix_micros(col("ts")) > mid).coalesce(1)
         .write.mode("append").parquet(s"$dir/flat")
       q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table(sink).as[Admitted](
+    })
+    val got = replayed.as[Admitted](
       org.apache.spark.sql.Encoders.product[Admitted]).collect().toSet
     assert(got === want)
   }
@@ -77,10 +75,8 @@ class StreamThrottleSpec extends SparkSpec {
     val schema = spark.read.parquet(s"$dir/flat").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/flat")
-    val sink = "throttle_evict_sink"
-    val q = StreamThrottle.throttle(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
+    val replayed = Replay.toMemory(StreamThrottle.throttle(stream), "append",
+        noDataBatches = true, drive = { q =>
       q.processAllAvailable()
       rows(10L * dayUs, 11 to 12).coalesce(1)
         .write.mode("append").parquet(s"$dir/flat")
@@ -93,11 +89,11 @@ class StreamThrottleSpec extends SparkSpec {
       // may or may not have been reaped yet depending on the trailing
       // no-data micro-batch)
       assert(stateRows <= 2L, s"state not evicted: $stateRows rows")
-      // and the admitted set is still the first-QUOTA-per-window rule
-      val admitted = spark.table(sink).collect()
-        .map(r => r.getAs[Long]("event_id")).toSet
-      assert(admitted === Set(1L, 2L, 11L, 12L, 21L, 22L))
-    } finally q.stop()
+    })
+    // and the admitted set is still the first-QUOTA-per-window rule
+    val admitted = replayed.collect()
+      .map(r => r.getAs[Long]("event_id")).toSet
+    assert(admitted === Set(1L, 2L, 11L, 12L, 21L, 22L))
   }
 
   test("q186 cardinality estimate equals the materialized self-join size") {

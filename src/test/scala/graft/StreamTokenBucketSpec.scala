@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{StreamTokenBucket, TbAdmitted, TbEvent}
+import graft.streaming.{Replay, StreamTokenBucket, TbAdmitted, TbEvent}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -61,14 +61,8 @@ class StreamTokenBucketSpec extends SparkSpec {
     val schema = spark.read.parquet(flat).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(flat)
-    val sink = "tb_sink_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StreamTokenBucket.limit(stream)
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.table(sink).collect()
+    val streamed = Replay.toMemory(StreamTokenBucket.limit(stream), "append",
+      noDataBatches = true).collect()
       .map(r => TbAdmitted(r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(streamed.length === streamed.toSet.size, "no duplicates")
     assert(streamed.toSet === expectedAdmitted())
